@@ -4,6 +4,11 @@
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
 SURVEY.md §2 with its DuckDB differential oracle (see
 ``physicsnemo_curator_spark/plans/queries.py``).
+
+The caller owns the session, so static confs that ``get_spark`` sets
+before the JVM starts cannot reach it: such a session keeps Spark's
+generated-code cache of 100 classes, and warm re-runs of the queries
+recompile what ``get_spark`` sessions keep cached.
 """
 
 from __future__ import annotations

@@ -24,20 +24,20 @@ O(log diameter) rounds — a 2^10-node path converges in ~10 rounds, not
 hash joins/aggregates; `localCheckpoint` truncates lineage each round so
 the plan doesn't grow (the standard iterative-Spark requirement).
 
-Convergence detection is free: labels only ever decrease, so the global
-sum of labels is strictly monotone — when one round leaves the
-(sum, count) pair unchanged, it is a fixed point.  The sum is computed
-as decimal(38,0), exact for any realistic id range (no int64 overflow
-at 10^12 nodes × 10^12 max id).
+Convergence detection rides along: labels only ever decrease, so a
+round that lowers no node's label has reached the fixed point.  Each
+round's materialization counts the nodes it lowered
+(``pyspark.sql.Observation``), so the check costs no job of its own and
+compares ids only for equality, which works for any orderable id type.
 
 Scale posture: state per round is one (node, label) row per vertex of
 the PAIR graph (near-dup docs only — a sliver of the corpus), shuffled
-on node id.  No driver-side state beyond the 2-value convergence probe.
+on node id.  The only state kept in Python is one observed count per round.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 __all__ = ["connected_components", "dedup_groups"]
@@ -86,59 +86,55 @@ def connected_components(
         )
     )
 
-    def _probe(lab: DataFrame) -> tuple:
-        # hash the label multiset: works for ANY orderable id type
-        # (string UUIDs included) — casting comp to decimal threw
-        # under ANSI for non-numeric ids, and silently returned NULL
-        # (premature "convergence") with ANSI off.  The decimal sum of
-        # per-row hashes cannot overflow or collide across rounds in
-        # practice, and equal sums on consecutive rounds with equal
-        # row counts is the fixed-point signal.
-        row = lab.agg(
-            F.sum(
-                F.xxhash64(F.col("comp")).cast("decimal(38,0)")
-            ).alias("s"),
-            F.count(F.lit(1)).alias("c"),
-        ).first()
-        return (row["s"], row["c"])
+    def _materialize(lab: DataFrame) -> tuple[DataFrame, int]:
+        # Count the nodes whose label the round lowered, observed by the
+        # action that materializes the round: under AQE even a lazy
+        # localCheckpoint runs the round's shuffle stages when it is
+        # called, so a probe action after it costs jobs of its own.
+        obs = Observation()
+        observed = lab.observe(
+            obs,
+            F.count(F.when(F.col("comp") != F.col("old"), 1)).alias("changed"),
+        ).select("node", "comp")
+        if checkpoint:
+            lab = observed.localCheckpoint(eager=True)
+        else:
+            observed.count()
+            lab = lab.select("node", "comp")
+        return lab, obs.get["changed"]
 
-    prev = _probe(labels)
     for _ in range(max_iter):
-        # hop: min over own label and neighbors' labels
-        nbr = (
-            und.join(
-                labels.select(
-                    F.col("node").alias("m"), F.col("comp").alias("mc")
-                ),
-                "m",
-            )
-            .select(F.col("n").alias("node"), F.col("mc").alias("comp"))
-        )
+        # hop: min over own label and neighbors' labels; ``old`` carries
+        # each node's label into the round's output
+        nbr = und.join(
+            labels.select(F.col("node").alias("m"), F.col("comp").alias("mc")),
+            "m",
+        ).select(F.col("n").alias("node"), F.col("mc").alias("comp"))
         hopped = (
-            labels.unionByName(nbr)
+            labels.withColumn("old", F.col("comp"))
+            .unionByName(nbr, allowMissingColumns=True)
             .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp"), F.min("old").alias("old"))
         )
         # jump: label <- label(label).  Every comp value is itself a node
         # id present in the label table, so the self-join is total; min()
         # keeps the smaller of the one-hop and two-hop labels.
+        # ``po`` only keeps both sides of the self-join the same
+        # aggregate, so AQE reuses its shuffle (pc is never null)
         parent = hopped.select(
-            F.col("node").alias("comp"), F.col("comp").alias("pc")
+            F.col("node").alias("comp"),
+            F.col("comp").alias("pc"),
+            F.col("old").alias("po"),
         )
-        labels = (
-            hopped.join(parent, "comp")
-            .select("node", F.least("comp", "pc").alias("comp"))
+        labels, changed = _materialize(
+            hopped.join(parent, "comp").select(
+                "node", F.least("comp", F.coalesce("pc", "po")).alias("comp"), "old"
+            )
         )
-        if checkpoint:
-            # eager=False + the probe right below: the probe's action
-            # materializes the checkpoint AND computes the convergence
-            # pair in ONE job (eager=True spent a separate job per
-            # round just filling the checkpoint)
-            labels = labels.localCheckpoint(eager=False)
-        cur = _probe(labels)
-        if cur == prev:
+        # labels only ever decrease, so a round that lowers none has
+        # reached the fixed point
+        if not changed:
             return labels
-        prev = cur
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )

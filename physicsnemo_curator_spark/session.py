@@ -35,6 +35,16 @@ _DEFAULTS: dict[str, str] = {
     # Read TIMESTAMP(NANOS) parquet columns as long; the table catalog
     # rebuilds them as micros timestamps (DuckDB-equivalent truncation).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache sized to a long-lived session's working set.
+    # Spark's default LRU of 100 is smaller than one warm pass of either
+    # perfbench workload, so every warm pass recompiled every class.
+    # Janino compiles per repeat pass, 100 -> 4096: relational ~130 -> 0,
+    # an ingest_batches op ~245 -> 0-36 (AQE re-plans renumber codegen
+    # stages); bench.py's 162 queries compile ~2380 classes, and their
+    # repeat pass recompiles 1600 at 2048 entries and 20 at 4096
+    # (BENCH_NOTES.md).  A static conf: it applies only when this
+    # builder starts the JVM, so a session built elsewhere keeps 100.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 

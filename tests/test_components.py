@@ -78,6 +78,11 @@ def test_dedup_groups_canonical_and_sizes(spark):
     assert keeps == {1, 10, 30}
 
 
+def test_uncheckpointed_path_matches_union_find(spark):
+    edges = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 3), (5, 7), (30, 33)]
+    _check(spark, edges, checkpoint=False)
+
+
 def test_nonconvergence_guard(spark):
     df = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "a long, b long")
     with pytest.raises(RuntimeError):

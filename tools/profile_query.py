@@ -7,7 +7,9 @@ For each named query: builds the DataFrame (plan construction timed
 separately), runs it twice (cold/warm), prints per-run wall plus the
 Spark job count consumed by each run (statusTracker delta — every job
 is a driver round-trip at sf0.1, so job count is the fixed-overhead
-proxy), and optionally dumps .explain("formatted") to DIR/<name>.txt.
+proxy) and its Janino compiles (CodegenMetrics delta — a warm run
+should compile nothing), and optionally dumps .explain("formatted")
+to DIR/<name>.txt.
 
 Mirrors bench.py's session config (AQE off, shuffle=8 at sf0.1) so the
 numbers line up with the bench artifact.
@@ -55,12 +57,19 @@ def main() -> None:
     def njobs() -> int:
         return len(st.getJobIdsForGroup(None))
 
+    # Janino compiles: a warm rep that still compiles has missed the
+    # session's generated-code cache
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def ncompiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     for name in args:
         spec = QUERIES[name]
         fn = spec.bench or spec.spark
         spark.sparkContext.setJobDescription(f"profile:{name}")
         for rep in range(2):
-            j0 = njobs()
+            j0, c0 = njobs(), ncompiles()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t_build = time.perf_counter() - t0
@@ -69,7 +78,7 @@ def main() -> None:
             t_exec = time.perf_counter() - t1
             print(
                 f"{name} rep{rep}: build {t_build:6.2f}s  exec {t_exec:6.2f}s"
-                f"  jobs {njobs() - j0}"
+                f"  jobs {njobs() - j0}  compiles {ncompiles() - c0}"
             )
         if explain_dir:
             os.makedirs(explain_dir, exist_ok=True)
