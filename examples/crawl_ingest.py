@@ -121,9 +121,7 @@ def main() -> None:
         keyed = fresh.withColumn(
             "doc_id", F.xxhash64("uri")
         )
-        dup = textops.duplicated_substring_stats(
-            keyed, min_tokens=8, min_count=2, hash_fn="xxhash64"
-        )
+        dup = textops.duplicated_substring_stats(keyed, min_tokens=8, min_count=2)
         keep_ids = dup.filter(F.col("dup_fraction") <= 0.5).select("doc_id")
         gated = keyed.join(keep_ids, "doc_id")
         n_gated = gated.count()

@@ -150,64 +150,83 @@ def read_optional_parquet(spark, path: str):
         raise
 
 
-def _tree_ident(root: str) -> str:
-    """Recursive freshness token for a store directory: every file's
-    (relative path, mtime_ns, size) folded into one md5.  Unlike the
-    table memo's direct-children token, store partitions mutate BELOW
-    the top level (dynamic partition overwrite rewrites files inside an
-    existing ``_batch=<id>/cell=<n>/`` dir without touching the root's
-    entry set), so the token must walk the whole tree.  Driver-side
-    stat work, O(files) — for the local stores this serves, far cheaper
-    than the Spark footer-inference job it replaces."""
+def path_ident(path: str) -> str:
+    """Freshness token of a local path, the one identity rule of the
+    session plan memo and the temp-fixture keys: ``mtime_ns:size`` for
+    a file; for a directory, every file below it (relative path,
+    mtime_ns, size) folded into one md5.  The walk is recursive because
+    dynamic partition overwrite rewrites files inside an existing
+    ``_batch=<id>/cell=<n>/`` dir without touching the root's entry set,
+    and an in-place rewrite changes a file's stat but not its
+    directory's.  Nanosecond mtime plus size, never a PID (PIDs recycle
+    inside containers) or whole seconds (same-second regenerations
+    collide)."""
     import hashlib
+    import stat
 
-    parts: list[str] = []
     try:
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames.sort()
-            rel = os.path.relpath(dirpath, root)
-            for fn in sorted(filenames):
-                try:
-                    st = os.stat(os.path.join(dirpath, fn))
-                    parts.append(f"{rel}/{fn}:{st.st_mtime_ns}:{st.st_size}")
-                except OSError:
-                    parts.append(f"{rel}/{fn}:gone")
+        st = os.stat(path)
     except OSError:
-        return "unreadable"
+        return "absent"
+    if not stat.S_ISDIR(st.st_mode):
+        return f"{st.st_mtime_ns}:{st.st_size}"
+    parts: list[str] = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames.sort()
+        rel = os.path.relpath(dirpath, path)
+        for fn in sorted(filenames):
+            try:
+                st = os.stat(os.path.join(dirpath, fn))
+                parts.append(f"{rel}/{fn}:{st.st_mtime_ns}:{st.st_size}")
+            except OSError:
+                parts.append(f"{rel}/{fn}:gone")
     if not parts:
         return "empty"
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def memoized_read(spark, key_path: str, local_root: str, build):
-    """Session plan memo for store reads, keyed on ``key_path`` plus
-    the recursive content identity of ``local_root``
-    (:func:`_tree_ident`).  ``build()`` constructs the lazy DataFrame
-    on a miss.  Only the plan (immutable) is reused — every action
-    still scans the parquet files; no data or results are cached.  Any
-    mutation of the tree (append, dynamic partition overwrite,
-    compaction) changes the token and rebuilds."""
-    cache: dict = spark.__dict__.setdefault("_pcs_store_plan_cache", {})
-    key = (key_path, _tree_ident(local_root))
+    """The session's plan memo, keyed on ``key_path`` plus the
+    :func:`path_ident` of ``local_root``.  ``build()`` constructs the
+    lazy DataFrame on a miss: ``spark.read.parquet`` re-runs driver
+    file listing plus a footer schema-inference job on every call, and
+    table loads and store probe loops re-read the same unchanged path
+    many times per session.  Only the plan is reused; every action
+    still scans the parquet files.
+
+    A changed identity is also the session's one freshness signal: the
+    superseded entry is dropped and ``refreshByPath`` re-caches every
+    persisted frame over the old bytes (shared intermediates the
+    CacheManager matches by path, and persists inside operators), so
+    nothing computed from the old bytes is served again."""
+    cache: dict = spark.__dict__.setdefault("_pcs_plan_memo", {})
+    key = (key_path, path_ident(local_root))
     df = cache.get(key)
     if df is None:
-        df = build()
-        # drop superseded identities of the same path so a mutating
-        # store cannot grow the memo unboundedly
-        for k in [k for k in cache if k[0] == key_path and k != key]:
+        stale = [k for k in cache if k[0] == key_path]
+        for k in stale:
             del cache[k]
+        if stale:
+            spark.catalog.refreshByPath(local_root)
+        df = build()
         cache[key] = df
     return df
 
 
+def persist_once(df):
+    """``df.persist()`` unless the CacheManager already holds an equal
+    plan.  ``storageLevel`` looks the plan up there, so a freshly built
+    equal plan reads as cached and a cleared session (``clearCache()``)
+    reads ``NONE`` again and re-caches on its next call."""
+    from pyspark.storagelevel import StorageLevel
+
+    return df.persist() if df.storageLevel == StorageLevel.NONE else df
+
+
 def memoized_parquet(spark, path: str):
-    """``spark.read.parquet`` with the resolved PLAN memoized per
-    session (:func:`memoized_read`) — the store-read twin of the table
-    catalog's plan memo.  Every ``spark.read.parquet`` call re-pays
-    driver file listing plus a footer schema-inference Spark job; a
-    probe loop that re-reads the same immutable store generation paid
-    that per call.  Non-local paths (s3a://, hdfs://) bypass the memo —
-    their identity cannot be stat'd cheaply."""
+    """``spark.read.parquet`` through the session plan memo
+    (:func:`memoized_read`).  Non-local paths (s3a://, hdfs://) bypass
+    the memo: their identity cannot be stat'd cheaply."""
     local = try_local_path(path)
     if local is None:
         return spark.read.parquet(path)

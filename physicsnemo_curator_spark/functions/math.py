@@ -30,10 +30,6 @@ def l2_norm(dx: Column, dy: Column, dz: Column) -> Column:
     return F.sqrt(dx * dx + dy * dy + dz * dz)
 
 
-def dot3(ax: Column, ay: Column, az: Column, bx: Column, by: Column, bz: Column) -> Column:
-    return ax * bx + ay * by + az * bz
-
-
 def cross3(ax, ay, az, bx, by, bz) -> tuple[Column, Column, Column]:
     return (ay * bz - az * by, az * bx - ax * bz, ax * by - ay * bx)
 

@@ -25,6 +25,7 @@ from physicsnemo_curator_spark.core.store import (
     held_lease,
     maintenance_root,
     memoized_parquet,
+    persist_once,
     validate_batch_id,
     verify_lease,
     write_batch_partitioned,
@@ -350,9 +351,11 @@ def minhash_near_duplicates(
         # the candidate set feeds both the doc prefilter and the pair
         # semi-join — persist both so neither expensive subtree
         # recomputes (at cluster scale these spill, not recompute)
-        sh = sh.persist()
+        sh = persist_once(sh)
     sigs = minhash_signatures(sh, num_hashes, seed, hash_fn=hash_fn)
-    cand = lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn).persist()
+    cand = persist_once(
+        lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn)
+    )
     return jaccard_pairs(sh, cand, max_df=max_df).filter(
         F.col("jaccard") >= F.lit(threshold)
     )
@@ -491,11 +494,6 @@ def simhash_duplicates(
         F.min("doc_id").alias("canonical_id"), F.count(F.lit(1)).alias("group_size")
     )
     return sig.join(groups, "simhash").select("doc_id", "canonical_id", "group_size")
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Popcount of a XOR b via bit_count (JVM-side)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_near_duplicates(

@@ -49,19 +49,3 @@ def salted_join(
     out = skewed_s.join(other_s, [key, "_salt"], how)
     return out.drop("_salt")
 
-
-def bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    *,
-    buckets: int = 32,
-    sort_by: str | None = None,
-) -> None:
-    """Persist a bucketed table so future joins/aggs on ``key``
-    co-locate without a shuffle (reference co-location constraints,
-    ``core/base.py:133-155``, become a storage-layout declaration)."""
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.saveAsTable(table_name)

@@ -526,7 +526,6 @@ def remove_duplicate_spans(
     min_df: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str | None = None,
 ) -> DataFrame:
     """Span-level exact dedup — the C4 "repeated three-sentence span" /
     RefinedWeb "duplicated line" curation step, generalized to corpora
@@ -543,9 +542,10 @@ def remove_duplicate_spans(
     frequency is a partial+final hash aggregate on the span key; the
     boilerplate set (df >= min_df) is tiny relative to the corpus by
     construction, so the removal join BROADCASTS it — the corpus-side
-    span table never shuffles.  ``hash_fn='xxhash64'`` aggregates and
-    joins on 64-bit span hashes instead of span strings (the
-    production twin: same join cardinality, fixed-width shuffle keys).
+    span table never shuffles.  The aggregate and join key on 64-bit
+    span hashes instead of span strings (fixed-width shuffle keys; the
+    output depends only on boilerplate membership, so it matches the
+    string-keyed DuckDB oracle).
     """
     if span_words < 1:
         raise ValueError("span_words must be >= 1")
@@ -578,10 +578,9 @@ def remove_duplicate_spans(
             "span",
         )
     )
-    key = (
-        F.xxhash64("span") if hash_fn == "xxhash64" else F.col("span")
-    ).alias("_key")
-    spans = spans.select(id_col, "span_idx", "span", key)
+    spans = spans.select(
+        id_col, "span_idx", "span", F.xxhash64("span").alias("_key")
+    )
     boiler = (
         spans.groupBy("_key")
         .agg(F.countDistinct(id_col).alias("df"))
@@ -616,7 +615,6 @@ def repetition_ratio(
     n: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str | None = None,
 ) -> DataFrame:
     """Gopher-style repetition signal: the fraction of a document's
     token n-grams taken by its single most frequent n-gram — high
@@ -629,13 +627,13 @@ def repetition_ratio(
     Grams are assembled with the shared ``_ngram_rows`` lead()-window
     kernel (see its docstring for the interpreted-HOF bake-off —
     measured 4.3 s vs 0.6 s steady at sf0.1 on this operator)."""
-    g = _ngram_rows(docs, id_col, text_col, n).select(id_col, "gram")
-    if hash_fn == "xxhash64":
-        # production twin: the aggregate only consumes counts, so
-        # shuffling 8-byte gram hashes instead of gram strings cuts the
-        # (doc, gram) shuffle width; collisions would need 2^32-scale
-        # per-doc gram counts to matter
-        g = g.select(F.col(id_col), F.xxhash64("gram").alias("gram"))
+    # the aggregate only consumes counts, so shuffling 8-byte gram
+    # hashes instead of gram strings cuts the (doc, gram) shuffle
+    # width; collisions would need 2^32-scale per-doc gram counts to
+    # matter
+    g = _ngram_rows(docs, id_col, text_col, n).select(
+        F.col(id_col), F.xxhash64("gram").alias("gram")
+    )
     per_gram = g.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
     return per_gram.groupBy(id_col).agg(
         F.sum("c").alias("n_grams"),
@@ -829,7 +827,6 @@ def duplicated_substring_stats(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str | None = None,
     broadcast_occurrences: bool = True,
 ) -> DataFrame:
     """Exact-substring duplication measure (the Lee et al. 2022
@@ -853,11 +850,11 @@ def duplicated_substring_stats(
     window row carries a copy of the doc's token array),
     transform()-then-posexplode = 15.1 s (higher-order lambdas
     evaluate interpreted), lead-window = 0.4 s warm.
-    ``hash_fn='xxhash64'`` keys the count/join on an 8-byte hash
-    instead of the window string.  The duplicated-window set is a
-    small fraction of the corpus for natural text and broadcasts for
-    the marking join (``broadcast_occurrences=False`` falls back to a
-    shuffle join for pathological highly-duplicated corpora).
+    The count/join keys on an 8-byte hash of the window string.  The
+    duplicated-window set is a small fraction of the corpus for natural
+    text and broadcasts for the marking join
+    (``broadcast_occurrences=False`` falls back to a shuffle join for
+    pathological highly-duplicated corpora).
     Coverage expands each duplicated start to its ``min_tokens``
     positions (constant factor) and distinct-counts per document.
     """
@@ -867,7 +864,6 @@ def duplicated_substring_stats(
         min_count=min_count,
         id_col=id_col,
         text_col=text_col,
-        hash_fn=hash_fn,
         broadcast_occurrences=broadcast_occurrences,
     )
     per_doc = covered.groupBy(id_col).agg(
@@ -899,7 +895,6 @@ def _duplicated_positions(
     min_count: int,
     id_col: str,
     text_col: str,
-    hash_fn: str | None,
     broadcast_occurrences: bool,
 ) -> DataFrame:
     """``(id, _p)`` rows: token positions covered by any duplicated
@@ -910,13 +905,9 @@ def _duplicated_positions(
         raise ValueError("min_tokens must be >= 1")
     if min_count < 2:
         raise ValueError("min_count must be >= 2")
-    windows = _ngram_rows(docs, id_col, text_col, min_tokens).select(
-        F.col(id_col), F.col("pos").alias("_s"), F.col("gram").alias("_win")
+    keyed = _ngram_rows(docs, id_col, text_col, min_tokens).select(
+        F.col(id_col), F.col("pos").alias("_s"), F.xxhash64("gram").alias("_key")
     )
-    key = (
-        F.xxhash64("_win") if hash_fn == "xxhash64" else F.col("_win")
-    ).alias("_key")
-    keyed = windows.select(id_col, "_s", key)
     occ = (
         keyed.groupBy("_key")
         .agg(F.count(F.lit(1)).alias("_cnt"))
@@ -941,7 +932,6 @@ def remove_duplicated_substrings(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str | None = None,
     broadcast_occurrences: bool = True,
     output_docs: DataFrame | None = None,
 ) -> DataFrame:
@@ -978,7 +968,6 @@ def remove_duplicated_substrings(
         min_count=min_count,
         id_col=id_col,
         text_col=text_col,
-        hash_fn=hash_fn,
         broadcast_occurrences=broadcast_occurrences,
     )
     src = output_docs if output_docs is not None else docs

@@ -24,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.store import path_ident, persist_once
 from physicsnemo_curator_spark.functions import math as M
 from physicsnemo_curator_spark.operators import (
     components,
@@ -60,18 +61,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _r6(c, name):
     return F.round(c, 6).alias(name)
-
-
-def _src_ident(path: str) -> str:
-    """Freshness token for a fixture-cache key: nanosecond mtime +
-    size (PIDs recycle inside containers; whole-second mtimes collide
-    on same-second regens).  The ONE copy of the identity rule — every
-    fixture/temp-shard cache keys through it."""
-    try:
-        st = os.stat(path)
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return "absent"
 
 
 # --------------------------------------------------------------------------
@@ -1311,7 +1300,7 @@ def q_st3_stream_welford(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Keyed on (sf_dir, source mtime) so repeat invocations in one run
     # reuse the copy, and on PID so concurrent processes sharing a box
     # never overwrite a directory mid-readStream.
-    ident = _src_ident(os.path.join(sf_dir, "events.parquet"))
+    ident = path_ident(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(f"{sf_dir}:{ident}".encode()).hexdigest()[:12]
     src = os.path.join(
         tempfile.gettempdir(), f"pcs_stream_src_{token}_{os.getpid()}"
@@ -1353,7 +1342,7 @@ def _stage_click_purchase_streams(
     import tempfile
 
     events = _t(spark, sf_dir, "events")
-    ident = _src_ident(os.path.join(sf_dir, "events.parquet"))
+    ident = path_ident(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(
         f"{sf_dir}:{ident}:{tag}:{max_files_per_trigger}".encode()
     ).hexdigest()[:12]
@@ -1563,7 +1552,7 @@ def _dash_store(spark: SparkSession, sf_dir: str):
 
     from physicsnemo_curator_spark.core.metrics import MetricsStore
 
-    ident = _src_ident(os.path.join(sf_dir, "events.parquet"))
+    ident = path_ident(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(f"{sf_dir}:{ident}:dash".encode()).hexdigest()[:12]
     mdir = os.path.join(
         tempfile.gettempdir(), f"pcs_dash_{token}_{os.getpid()}"
@@ -1846,66 +1835,25 @@ FROM k ORDER BY doc_id
 """
 
 
-# Session-scoped materialization of the word-trigram shingle table:
-# four dedup operators consume the identical stream, so shingling is a
-# shared sub-plan (engine-level materialized view), not a per-query cost.
-_SHINGLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
-def _cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keyed on the SOURCE identity too (mtime_ns + size, the
-    # _fixture_dir rule): a documents table regenerated at the same
-    # path within one session must never be served stale shingles;
-    # the superseded entry is unpersisted on replacement
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
-    key = (id(spark.sparkContext), sf_dir, ident)
-    if key not in _SHINGLE_CACHE:
-        for k in [k for k in _SHINGLE_CACHE if k[:2] == key[:2]]:
-            try:
-                _SHINGLE_CACHE.pop(k).unpersist()
-            except Exception:
-                pass
-        docs = _t(spark, sf_dir, "documents")
-        _SHINGLE_CACHE[key] = dedup.shingle_table(docs, k=3, unit="word").persist()
-    return _SHINGLE_CACHE[key]
-
-
-# Session-scoped materialization of the near-dup PAIR stream — the
-# _SHINGLE_CACHE convention one level up: five queries (components,
-# representative, split_leakage_free, split_store path, minhash gate)
-# consume the IDENTICAL (a, b, jaccard) frame and each re-paid the
-# signatures → bands → verify-join pipeline (~1.7-2.1 s warm at sf0.1
-# vs ~0.2 s from the persisted frame).  Keyed on hash_fn because the
-# oracle (md5/arith) and production (xxhash64) twins produce the same
-# VALUES through different streams; persist() only — every result is
-# still computed from the parquet inputs, and SPARK_GRAFT_CLEARCACHE
-# drops it between queries like every other shared cache.
-_PAIR_CACHE: dict[tuple[int, str, str, str], DataFrame] = {}
-
-
+# Reuse policy: the dedup family's shared frames (the word-trigram
+# shingle table and the (a, b, jaccard) pair stream five queries
+# consume) are persisted once (core.store.persist_once), and Spark's
+# CacheManager serves their data to every later call that builds an
+# equal plan.  Freshness lives in the plan memo: a rewritten documents
+# table refreshes every persisted frame over its old bytes
+# (core.store.memoized_read).
 def _cached_near_dup_pairs(
     spark: SparkSession, sf_dir: str, hash_fn: str
 ) -> DataFrame:
-    # source-identity key + superseded-entry eviction: same rule as
-    # _cached_shingles above
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
-    key = (id(spark.sparkContext), sf_dir, hash_fn, ident)
-    if key not in _PAIR_CACHE:
-        for k in [k for k in _PAIR_CACHE if k[:3] == key[:3]]:
-            try:
-                _PAIR_CACHE.pop(k).unpersist()
-            except Exception:
-                pass
-        sh = _cached_shingles(spark, sf_dir)
-        if hash_fn == "jaccard":
-            pairs = dedup.jaccard_pairs(sh).filter(F.col("jaccard") >= 0.8)
-        else:
-            docs = _t(spark, sf_dir, "documents")
-            pairs = dedup.minhash_near_duplicates(
-                docs, threshold=0.8, shingles=sh, hash_fn=hash_fn
-            )
-        _PAIR_CACHE[key] = pairs.persist()
-    return _PAIR_CACHE[key]
+    docs = _t(spark, sf_dir, "documents")
+    sh = persist_once(dedup.shingle_table(docs, k=3, unit="word"))
+    if hash_fn == "jaccard":
+        pairs = dedup.jaccard_pairs(sh).filter(F.col("jaccard") >= 0.8)
+    else:
+        pairs = dedup.minhash_near_duplicates(
+            docs, threshold=0.8, shingles=sh, hash_fn=hash_fn
+        )
+    return persist_once(pairs)
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2168,7 +2116,7 @@ def _split_gate_store(spark: SparkSession, sf_dir: str, hash_fn: str) -> str:
     import tempfile
 
     docs = _t(spark, sf_dir, "documents")
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
+    ident = path_ident(os.path.join(sf_dir, "documents.parquet"))
     token = hashlib.md5(
         f"{sf_dir}:{ident}:splitstore:{hash_fn}".encode()
     ).hexdigest()[:12]
@@ -2790,14 +2738,10 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from physicsnemo_curator_spark.sources.warc import read_wet, write_wet
 
-    # Key the temp-shard cache on the source parquet's identity (the
-    # q_st3_stream_welford discipline): a regenerated documents table
-    # must never be served stale shards from an earlier process — PIDs
-    # recycle inside containers, so pid alone is not a freshness token.
-    # Nanosecond mtime + size, not whole-second mtime: two regens
-    # within one second (or a cp -p with preserved times but different
-    # size) must still produce distinct tokens.
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
+    # Key the temp-shard cache on the source parquet's identity
+    # (path_ident): a regenerated documents table must never be served
+    # stale shards from an earlier process.
+    ident = path_ident(os.path.join(sf_dir, "documents.parquet"))
     token = hashlib.md5(f"warc:{sf_dir}:{ident}".encode()).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), f"pcs_wet_{token}")
     os.makedirs(base, exist_ok=True)
@@ -2851,21 +2795,17 @@ GROUP BY 1 ORDER BY source
 """
 
 
-def q_text_span_dedup(
-    spark: SparkSession, sf_dir: str, hash_fn: str | None = None
-) -> DataFrame:
+def q_text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level exact dedup (textops.remove_duplicate_spans): the C4
     repeated-span / RefinedWeb duplicated-line curation step — every
     8-word span occurring in >= 2 distinct documents is boilerplate and
     deleted from ALL of them, survivors re-joined in document order.
     Plan: linear span explode → partial+final df aggregate → broadcast
     anti-style removal join (the boilerplate set is small by
-    construction; the corpus side never shuffles for the join).  The
-    benched twin keys the aggregate/join on xxhash64(span)."""
+    construction; the corpus side never shuffles for the join), keyed
+    on xxhash64(span)."""
     docs = _t(spark, sf_dir, "documents")
-    cleaned = textops.remove_duplicate_spans(
-        docs, span_words=8, min_df=2, hash_fn=hash_fn
-    )
+    cleaned = textops.remove_duplicate_spans(docs, span_words=8, min_df=2)
     return (
         cleaned.select(
             "doc_id",
@@ -2897,34 +2837,17 @@ FROM m GROUP BY doc_id ORDER BY doc_id LIMIT 500
 """
 
 
-def q_text_span_dedup_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-twin span dedup: identical semantics to
-    q_text_span_dedup but the df aggregate and removal join key on
-    ``xxhash64(span)`` — the fixed-width-shuffle-key path bench.py
-    times.  The cleaned output is hash-fn-INVARIANT (the hash only
-    keys the aggregate; boilerplate membership is the same set), so
-    the md5-based DuckDB oracle replays it byte-for-byte — this row
-    puts the production code path itself behind the driver gate
-    rather than only an equivalence unit test."""
-    return q_text_span_dedup(spark, sf_dir, hash_fn="xxhash64")
-
-
-def q_text_substring_dup(
-    spark: SparkSession, sf_dir: str, hash_fn: str | None = None
-) -> DataFrame:
+def q_text_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplication measure (textops.
     duplicated_substring_stats, the Lee et al. 2022 dedup signal):
     fraction of each document's tokens lying inside any 8-token
     window occurring >= 2 times corpus-wide — stride-1 windows catch
     duplicated substrings at ANY alignment, unlike the fixed tiling
     of q_text_span_dedup.  The oracle replays window slicing,
-    occurrence counting, and position coverage in SQL; the benched
-    twin keys windows on xxhash64."""
+    occurrence counting, and position coverage in SQL."""
     docs = _t(spark, sf_dir, "documents")
     return (
-        textops.duplicated_substring_stats(
-            docs, min_tokens=8, min_count=2, hash_fn=hash_fn
-        )
+        textops.duplicated_substring_stats(docs, min_tokens=8, min_count=2)
         .orderBy("doc_id")
         .limit(300)
     )
@@ -2956,9 +2879,7 @@ ORDER BY doc_id LIMIT 300
 """
 
 
-def q_text_substring_rm(
-    spark: SparkSession, sf_dir: str, hash_fn: str | None = None
-) -> DataFrame:
+def q_text_substring_rm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Removal form of the exact-substring dedup (textops.
     remove_duplicated_substrings): every token inside any duplicated
     8-token window deleted, survivors re-joined in document order —
@@ -2977,7 +2898,6 @@ def q_text_substring_rm(
         docs,
         min_tokens=8,
         min_count=2,
-        hash_fn=hash_fn,
         output_docs=docs.orderBy("doc_id").limit(300),
     )
     return (
@@ -3031,21 +2951,19 @@ ORDER BY doc_id LIMIT 300
 """
 
 
-def q_text_repetition(
-    spark: SparkSession, sf_dir: str, hash_fn: str | None = None
-) -> DataFrame:
+def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signal (textops.repetition_ratio): the
     single most frequent bigram's share of each doc's bigrams — the
-    boilerplate/spam flag quality filters gate on.  The benched twin
-    shuffles xxhash64 gram keys instead of gram strings (the aggregate
-    consumes only counts; equivalence pinned in tests)."""
+    boilerplate/spam flag quality filters gate on.  The aggregate
+    shuffles xxhash64 gram keys instead of gram strings (it consumes
+    only counts)."""
     docs = _t(spark, sf_dir, "documents")
     # NOT limit-before-operator: repetition_ratio emits rows only for
     # docs with >= 1 gram, so "300 smallest doc_ids" and "smallest 300
     # OUTPUT rows" diverge on a corpus with gram-less docs — the
     # pre-limit form is not universally result-identical (contrast
     # q_text_redact_pii, whose projection is total per doc)
-    rep = textops.repetition_ratio(docs, n=2, hash_fn=hash_fn)
+    rep = textops.repetition_ratio(docs, n=2)
     return (
         rep.select(
             "doc_id", "n_grams", _r6(F.col("top_frac"), "top_frac")
@@ -4199,7 +4117,7 @@ def _ivfpq_gate_store(spark: SparkSession, sf_dir: str):
     s16 = mllib_ann.md5_sample_centroids(corpus, k=16)
     centers = s16[:8]
     cbs = mllib_ann.pq_train(corpus, m=8, ks=16, dim=64, sample_vectors=s16)
-    ident = _src_ident(os.path.join(sf_dir, "embeddings.parquet"))
+    ident = path_ident(os.path.join(sf_dir, "embeddings.parquet"))
     token = hashlib.md5(
         f"{sf_dir}:{ident}:ivfpq2".encode()
     ).hexdigest()[:12]
@@ -4983,7 +4901,7 @@ def q_semantic_incremental(
             f"adapts k to {k}; call with pin_oracle_k=False (no "
             "oracle) for large corpora"
         )
-    ident = _src_ident(os.path.join(sf_dir, "embeddings.parquet"))
+    ident = path_ident(os.path.join(sf_dir, "embeddings.parquet"))
     token = hashlib.md5(
         f"{sf_dir}:{ident}:sem:{k}".encode()
     ).hexdigest()[:12]
@@ -5327,13 +5245,12 @@ FROM pairs WHERE bit_count(xor(sa, sb)) <= 8 ORDER BY a, b
 # 50 the external driver re-verifies this round.
 def _fixture_dir(sf_dir: str, tag: str) -> str:
     """Temp fixture directory keyed on the source parquet's identity
-    (the q_warc_scan discipline, queries.py ~:2060): a regenerated
-    documents table must never be served stale fixtures — nanosecond
-    mtime + size, not pid (pids recycle inside containers)."""
+    (:func:`~physicsnemo_curator_spark.core.store.path_ident`): a
+    regenerated documents table must never be served stale fixtures."""
     import hashlib
     import tempfile
 
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
+    ident = path_ident(os.path.join(sf_dir, "documents.parquet"))
     token = hashlib.md5(f"{tag}:{sf_dir}:{ident}".encode()).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), f"pcs_{tag}_{token}")
     os.makedirs(base, exist_ok=True)
@@ -10776,7 +10693,6 @@ QUERIES: dict[str, QuerySpec] = {
     "q_text_token_ids": QuerySpec(q_text_token_ids, ORACLE_TEXT_TOKEN_IDS),
     "q_pack_sequences": QuerySpec(q_pack_sequences, ORACLE_PACK_SEQUENCES),
     "q_warc_scan": QuerySpec(q_warc_scan, ORACLE_WARC_SCAN),
-    "q_text_span_dedup_xx": QuerySpec(q_text_span_dedup_xx, ORACLE_TEXT_SPAN_DEDUP),
     "q_sketch_bloom": QuerySpec(
         q_sketch_bloom,
         ORACLE_SKETCH_BLOOM,
@@ -10787,16 +10703,8 @@ QUERIES: dict[str, QuerySpec] = {
         ORACLE_SKETCH_CMS,
         bench=lambda s, d: q_sketch_cms(s, d, hash_fn="xxhash64"),
     ),
-    "q_text_substring_dup": QuerySpec(
-        q_text_substring_dup,
-        ORACLE_TEXT_SUBSTRING_DUP,
-        bench=lambda s, d: q_text_substring_dup(s, d, hash_fn="xxhash64"),
-    ),
-    "q_text_substring_rm": QuerySpec(
-        q_text_substring_rm,
-        ORACLE_TEXT_SUBSTRING_RM,
-        bench=lambda s, d: q_text_substring_rm(s, d, hash_fn="xxhash64"),
-    ),
+    "q_text_substring_dup": QuerySpec(q_text_substring_dup, ORACLE_TEXT_SUBSTRING_DUP),
+    "q_text_substring_rm": QuerySpec(q_text_substring_rm, ORACLE_TEXT_SUBSTRING_RM),
     "q_mix_temperature": QuerySpec(q_mix_temperature, ORACLE_MIX_TEMPERATURE),
     "q_s2_intersect": QuerySpec(q_s2_intersect, ORACLE_S2),
     "q_s4_union_all": QuerySpec(q_s4_union_all, ORACLE_S4),
@@ -10965,16 +10873,8 @@ QUERIES: dict[str, QuerySpec] = {
     "q_ann_pq_rotated": QuerySpec(
         q_ann_pq_rotated, ORACLE_ANN_PQ_ROTATED
     ),
-    "q_text_span_dedup": QuerySpec(
-        q_text_span_dedup,
-        ORACLE_TEXT_SPAN_DEDUP,
-        bench=lambda s, d: q_text_span_dedup(s, d, hash_fn="xxhash64"),
-    ),
-    "q_text_repetition": QuerySpec(
-        q_text_repetition,
-        ORACLE_TEXT_REPETITION,
-        bench=lambda s, d: q_text_repetition(s, d, hash_fn="xxhash64"),
-    ),
+    "q_text_span_dedup": QuerySpec(q_text_span_dedup, ORACLE_TEXT_SPAN_DEDUP),
+    "q_text_repetition": QuerySpec(q_text_repetition, ORACLE_TEXT_REPETITION),
 
 }
 
@@ -11080,7 +10980,6 @@ _DRIVER_ORDER = [
     "q_netcdf3_roundtrip",
     "q_dataset_layout",
     "q_warc_scan",
-    "q_text_span_dedup_xx",
     "q_sketch_bloom",
     "q_media_fmp4",
     "q_st5_stream_leftouter_join",

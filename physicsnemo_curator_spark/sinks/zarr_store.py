@@ -27,7 +27,6 @@ import json
 import math
 import os
 import zlib
-from collections.abc import Iterator
 from datetime import timezone
 from typing import Any
 
@@ -477,12 +476,6 @@ def write_mesh_zarr(
         str(r["mesh_id"]): (int(r["nt"]), int(r["npts"]), 3)
         for r in written.distinct().collect()
     }
-
-
-def iter_chunk_files(adir: str) -> Iterator[str]:
-    for fn in sorted(os.listdir(adir)):
-        if not fn.startswith("."):
-            yield os.path.join(adir, fn)
 
 
 # ------------------------------------------------- Zarr v3 + sharding

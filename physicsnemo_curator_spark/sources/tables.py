@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.store import memoized_read
+
 TABLE_NAMES: tuple[str, ...] = (
     "region",
     "nation",
@@ -69,54 +71,22 @@ def _ensure_confs(spark: SparkSession) -> None:
         pass
 
 
-def _path_ident(path: str) -> str:
-    """Freshness token for the plan memo: nanosecond mtime + size of
-    the parquet path; for a DIRECTORY-backed table the token also
-    folds in every direct child's (name, mtime_ns, size) — an in-place
-    O_TRUNC rewrite of a part file changes the file's own stat but NOT
-    the directory entry, which the directory-level stat alone would
-    miss (and the memoized plan's FileIndex would then carry stale
-    file lengths)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return "absent"
-    if not os.path.isdir(path):
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    parts = [f"{st.st_mtime_ns}:{st.st_size}"]
-    try:
-        with os.scandir(path) as it:
-            for e in sorted(it, key=lambda e: e.name):
-                try:
-                    s = e.stat()
-                    parts.append(f"{e.name}:{s.st_mtime_ns}:{s.st_size}")
-                except OSError:
-                    parts.append(f"{e.name}:gone")
-    except OSError:
-        return "unreadable"
-    import hashlib
-
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table; filters/projections on the result push down to parquet.
 
-    The resolved PLAN is memoized per session, keyed on the parquet
-    path's identity (mtime_ns + size): ``spark.read.parquet`` re-runs
-    driver-side file listing + footer schema inference on every call
-    (~100 ms), and a suite that loads the same static table hundreds of
-    times per session re-paid it each time.  Only the lazy DataFrame
-    (an immutable logical plan) is reused — every action still scans
-    the parquet files; no data or results are cached.  A replaced or
-    regenerated table changes the identity token and rebuilds."""
+    The resolved plan comes from the session plan memo
+    (:func:`~physicsnemo_curator_spark.core.store.memoized_read`):
+    ``spark.read.parquet`` re-runs driver-side file listing + footer
+    schema inference on every call (~100 ms), and a suite loads the
+    same static table hundreds of times per session.  A replaced or
+    regenerated table changes the path's identity, rebuilds the plan
+    and refreshes every persisted frame over the old bytes."""
     _ensure_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    cache: dict = spark.__dict__.setdefault("_pcs_table_plan_cache", {})
-    key = (path, _path_ident(path))
-    df = cache.get(key)
-    if df is not None:
-        return df
+    return memoized_read(spark, path, path, lambda: _read_table(spark, path, name))
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     dtypes = dict(df.dtypes)
     for col in _NANO_TS_COLS.get(name, ()):
@@ -133,11 +103,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col, dtype in dtypes.items():
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    # drop superseded identities of the same path so a regenerating
-    # test directory cannot grow the memo unboundedly
-    for k in [k for k in cache if k[0] == path and k != key]:
-        del cache[k]
-    cache[key] = df
     return df
 
 

@@ -277,18 +277,18 @@ def test_repetition_ratio(spark):
     assert out[2] == (5, 1 / 5)
 
 
-def test_repetition_ratio_hash_twin_equivalent(spark):
-    """The xxhash64-keyed production twin yields identical ratios."""
+def test_repetition_ratio_per_doc_counts(spark):
+    """Gram counts are per document: 50 docs share no grams, and each
+    doc's top gram is its own repeated word pair."""
     df = spark.createDataFrame(
         [(i, f"w{i} " * 5 + " ".join(f"t{i}x{j}" for j in range(20)))
-         for j in range(1) for i in range(50)],
+         for i in range(50)],
         "doc_id long, text string",
     )
     a = {(r.doc_id): (r.n_grams, round(r.top_frac, 9))
          for r in textops.repetition_ratio(df).collect()}
-    b = {(r.doc_id): (r.n_grams, round(r.top_frac, 9))
-         for r in textops.repetition_ratio(df, hash_fn="xxhash64").collect()}
-    assert a == b
+    # 25 tokens -> 24 bigrams, 'w{i} w{i}' 4 of them
+    assert a == {i: (24, round(4 / 24, 9)) for i in range(50)}
 
 
 # --- remove_duplicate_spans ------------------------------------------------
@@ -335,7 +335,7 @@ def test_remove_duplicate_spans_min_df_threshold(spark):
     assert out4.agg(F.sum("removed_spans")).first()[0] == 0
 
 
-def test_remove_duplicate_spans_hash_twin_and_validation(spark):
+def test_remove_duplicate_spans_output_and_validation(spark):
     docs = _span_docs(spark)
     base = {
         (r["doc_id"], r["text"], r["kept_spans"])
@@ -343,13 +343,12 @@ def test_remove_duplicate_spans_hash_twin_and_validation(spark):
             docs, span_words=4, min_df=2
         ).collect()
     }
-    twin = {
-        (r["doc_id"], r["text"], r["kept_spans"])
-        for r in textops.remove_duplicate_spans(
-            docs, span_words=4, min_df=2, hash_fn="xxhash64"
-        ).collect()
+    assert base == {
+        ("a", "alpha beta gamma delta", 1),
+        ("b", "epsilon zeta eta theta", 1),
+        ("c", "iota kappa lambda mu nu xi", 2),
+        ("d", "", 0),
     }
-    assert base == twin
     with pytest.raises(ValueError, match="span_words"):
         textops.remove_duplicate_spans(docs, span_words=0)
     with pytest.raises(ValueError, match="min_df"):
@@ -437,7 +436,7 @@ def test_duplicated_substring_stats_any_alignment(spark):
     """Stride-1 windows catch a duplicated passage at ANY offset — the
     case fixed tiling (remove_duplicate_spans) misses; within-document
     repetition counts as duplication (occurrences, not distinct docs);
-    unique text scores 0; the xxhash64 twin is equivalent."""
+    unique text scores 0."""
     from pyspark.sql import functions as F
 
     from physicsnemo_curator_spark.operators.textops import (
@@ -472,13 +471,6 @@ def test_duplicated_substring_stats_any_alignment(spark):
     # doc 3: clean
     assert out[3].n_dup_tokens == 0 and out[3].dup_fraction == 0.0
     assert abs(out[0].dup_fraction - round(8 / 13, 6)) < 1e-9
-
-    # xxhash64 production twin computes the identical frame
-    a = sorted(map(tuple, duplicated_substring_stats(
-        docs, min_tokens=8, min_count=2).collect()))
-    b = sorted(map(tuple, duplicated_substring_stats(
-        docs, min_tokens=8, min_count=2, hash_fn="xxhash64").collect()))
-    assert a == b
 
     # empty text is well-defined (no ANSI division crash)
     empty = spark.createDataFrame([(9, "")], "doc_id long, text string")

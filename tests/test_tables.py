@@ -1,7 +1,8 @@
-"""Catalog plan-memo tests (sources/tables.py load_table).
+"""Session plan-memo tests (core/store.py memoized_read, reached through
+sources/tables.py load_table and core/store.py memoized_parquet).
 
-The r15 optimization memoizes the resolved lazy plan per session keyed
-on the parquet path's identity (mtime_ns + size): schema inference +
+The memo keeps the resolved lazy plan per session keyed on the path's
+identity (core/store.py path_ident): schema inference +
 file listing ran on EVERY call (~100 ms driver-side) for tables that
 never change within a session.  These tests pin the contract: hits
 return the same plan object, a regenerated file misses, and the memo
@@ -40,7 +41,7 @@ def test_load_table_memo_hit_and_identity_miss(spark, tmp_path):
     assert df3.count() == 5
 
     # the superseded identity entry for the same path was evicted
-    cache = spark.__dict__["_pcs_table_plan_cache"]
+    cache = spark.__dict__["_pcs_plan_memo"]
     assert sum(1 for k in cache if k[0] == p) == 1
 
 
@@ -103,5 +104,5 @@ def test_memoized_parquet_hit_and_deep_mutation_miss(spark, tmp_path):
     assert df3 is not df1
     assert df3.count() == 5
 
-    cache = spark.__dict__["_pcs_store_plan_cache"]
+    cache = spark.__dict__["_pcs_plan_memo"]
     assert sum(1 for k in cache if k[0] == store) == 1

@@ -5,36 +5,25 @@ Usage: python tools/dump_explains.py DIR SUFFIX q_name [q_name ...]
 
 Builds each query's DataFrame (running whatever driver-side fixture /
 training steps the build needs) and writes DIR/<name>_<SUFFIX>.txt.
-Mirrors bench.py's session config (AQE off, shuffle=8 at sf0.1) so the
-plans match the bench artifact's execution shape.
+Runs on bench.py's session (``bench_session``) so the plans match the
+bench artifact's execution shape.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_session  # noqa: E402
 from physicsnemo_curator_spark.plans.queries import QUERIES  # noqa: E402
-from physicsnemo_curator_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    shuffle = max(8, min(cpus, int(64 * sf))) if sf > 0 else cpus
-    spark = get_spark(
-        app_name="pcs-explains",
-        shuffle_partitions=shuffle,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, sf_dir, _, _ = bench_session("pcs-explains")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

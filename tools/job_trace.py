@@ -10,33 +10,17 @@ Usage: python tools/job_trace.py q_name [q_name ...]
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_session
 from physicsnemo_curator_spark.plans.queries import QUERIES
-from physicsnemo_curator_spark.session import get_spark
 
 
 def main() -> None:
     names = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    shuffle = max(8, min(cpus, int(64 * sf))) if sf > 0 else cpus
-    spark = get_spark(
-        app_name="pcs-jobtrace",
-        shuffle_partitions=shuffle,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from physicsnemo_curator_spark.sources.tables import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).count()
-
+    spark, sf_dir, _, _ = bench_session("pcs-jobtrace")
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
 

@@ -11,21 +11,20 @@ proxy) and its Janino compiles (CodegenMetrics delta — a warm run
 should compile nothing), and optionally dumps .explain("formatted")
 to DIR/<name>.txt.
 
-Mirrors bench.py's session config (AQE off, shuffle=8 at sf0.1) so the
-numbers line up with the bench artifact.
+Runs on bench.py's session (``bench_session``) so the numbers line up
+with the bench artifact.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_session
 from physicsnemo_curator_spark.plans.queries import QUERIES
-from physicsnemo_curator_spark.session import get_spark
 
 
 def main() -> None:
@@ -35,22 +34,7 @@ def main() -> None:
         if a == "--explain-dir":
             explain_dir = sys.argv[1:][i + 1]
             args.remove(explain_dir)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    shuffle = max(8, min(cpus, int(64 * sf))) if sf > 0 else cpus
-    spark = get_spark(
-        app_name="pcs-profile",
-        shuffle_partitions=shuffle,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(10_000).selectExpr("sum(id)").collect()
-    from physicsnemo_curator_spark.sources.tables import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).count()
+    spark, sf_dir, _, _ = bench_session("pcs-profile")
 
     st = spark.sparkContext.statusTracker()
 
