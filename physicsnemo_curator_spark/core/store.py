@@ -213,16 +213,6 @@ def memoized_read(spark, key_path: str, local_root: str, build):
     return df
 
 
-def persist_once(df):
-    """``df.persist()`` unless the CacheManager already holds an equal
-    plan.  ``storageLevel`` looks the plan up there, so a freshly built
-    equal plan reads as cached and a cleared session (``clearCache()``)
-    reads ``NONE`` again and re-caches on its next call."""
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist() if df.storageLevel == StorageLevel.NONE else df
-
-
 def memoized_parquet(spark, path: str):
     """``spark.read.parquet`` through the session plan memo
     (:func:`memoized_read`).  Non-local paths (s3a://, hdfs://) bypass

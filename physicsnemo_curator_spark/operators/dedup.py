@@ -25,7 +25,6 @@ from physicsnemo_curator_spark.core.store import (
     held_lease,
     maintenance_root,
     memoized_parquet,
-    persist_once,
     validate_batch_id,
     verify_lease,
     write_batch_partitioned,
@@ -351,11 +350,9 @@ def minhash_near_duplicates(
         # the candidate set feeds both the doc prefilter and the pair
         # semi-join — persist both so neither expensive subtree
         # recomputes (at cluster scale these spill, not recompute)
-        sh = persist_once(sh)
+        sh = sh.persist()
     sigs = minhash_signatures(sh, num_hashes, seed, hash_fn=hash_fn)
-    cand = persist_once(
-        lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn)
-    )
+    cand = lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn).persist()
     return jaccard_pairs(sh, cand, max_df=max_df).filter(
         F.col("jaccard") >= F.lit(threshold)
     )

@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from physicsnemo_curator_spark.core.store import path_ident, persist_once
+from physicsnemo_curator_spark.core.store import path_ident
 from physicsnemo_curator_spark.functions import math as M
 from physicsnemo_curator_spark.operators import (
     components,
@@ -1837,23 +1837,24 @@ FROM k ORDER BY doc_id
 
 # Reuse policy: the dedup family's shared frames (the word-trigram
 # shingle table and the (a, b, jaccard) pair stream five queries
-# consume) are persisted once (core.store.persist_once), and Spark's
-# CacheManager serves their data to every later call that builds an
-# equal plan.  Freshness lives in the plan memo: a rewritten documents
-# table refreshes every persisted frame over its old bytes
-# (core.store.memoized_read).
+# consume) are persisted on every call.  Spark's CacheManager skips an
+# equal plan it already holds (logging "Asked to cache already cached
+# data" at WARN), serves its data to every later equal plan, and
+# re-caches after clearCache().  Freshness lives in the plan memo: a
+# rewritten documents table refreshes every persisted frame over its
+# old bytes (core.store.memoized_read).
 def _cached_near_dup_pairs(
     spark: SparkSession, sf_dir: str, hash_fn: str
 ) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    sh = persist_once(dedup.shingle_table(docs, k=3, unit="word"))
+    sh = dedup.shingle_table(docs, k=3, unit="word").persist()
     if hash_fn == "jaccard":
         pairs = dedup.jaccard_pairs(sh).filter(F.col("jaccard") >= 0.8)
     else:
         pairs = dedup.minhash_near_duplicates(
             docs, threshold=0.8, shingles=sh, hash_fn=hash_fn
         )
-    return persist_once(pairs)
+    return pairs.persist()
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

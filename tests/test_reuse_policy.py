@@ -1,5 +1,5 @@
 """The session reuse policy: the dedup family's shared frames are
-persisted once and shared through Spark's CacheManager, and freshness
+persisted and shared through Spark's CacheManager, and freshness
 lives in the session plan memo (core/store.py ``memoized_read``).
 
 Each test runs on its own copy of the sf0.01 tables, so no other test's
