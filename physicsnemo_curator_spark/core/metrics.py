@@ -152,12 +152,13 @@ class MetricsStore:
     ) -> bool:
         from pyspark.sql import functions as F
 
-        try:
-            # attempt the read rather than os.path.exists: the ledger
-            # may live on s3a/hdfs where a local exists-check is
-            # always False and dashboards would silently render empty
-            df = spark.read.parquet(path)
-        except Exception:
+        from physicsnemo_curator_spark.core.store import read_optional_parquet
+
+        # a ledger not written yet is expected (no Spark job for an
+        # absent local path; s3a/hdfs paths are read and only a missing
+        # path counts as absent); any other read failure propagates
+        df = read_optional_parquet(spark, path)
+        if df is None:
             return False
         if run_id is not None:
             # DataFrame-side equality — run_id is caller-supplied text

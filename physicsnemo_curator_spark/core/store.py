@@ -68,6 +68,7 @@ __all__ = [
     "try_local_path",
     "read_optional_parquet",
     "read_batch",
+    "release_checkpoint",
     "write_batch_partitioned",
     "carry_surviving",
 ]
@@ -216,11 +217,64 @@ def memoized_read(spark, key_path: str, local_root: str, build):
 def memoized_parquet(spark, path: str):
     """``spark.read.parquet`` through the session plan memo
     (:func:`memoized_read`).  Non-local paths (s3a://, hdfs://) bypass
-    the memo: their identity cannot be stat'd cheaply."""
+    the memo: their identity cannot be stat'd cheaply.  A miss reads
+    the schema Spark wrote into a data file's footer
+    (:func:`footer_schema`) instead of running Spark's schema-inference
+    job; a path without one (no data file yet, or parquet written by
+    another engine) is inferred as before."""
     local = try_local_path(path)
     if local is None:
         return spark.read.parquet(path)
-    return memoized_read(spark, path, local, lambda: spark.read.parquet(path))
+
+    def build():
+        schema = footer_schema(local)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
+
+    return memoized_read(spark, path, local, build)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(local: str):
+    """The Spark schema of the first parquet data file at or below the
+    local path ``local``, read from the footer metadata Spark writes
+    (pyarrow reads one footer; Spark's own inference runs a job for
+    it), or None when there is no data file or it carries no Spark
+    schema.  Partition columns are not in it: the reader adds them from
+    the directory names, as it does for an inferred schema."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    if os.path.isfile(local):
+        files = [local]
+    else:
+        files = []
+        for base, dirs, names in os.walk(local):
+            # Spark's hidden-file rule: skip _ and . names, except
+            # partition directories (``_batch=<id>``)
+            dirs[:] = sorted(d for d in dirs if "=" in d or not d.startswith(("_", ".")))
+            files = [
+                os.path.join(base, n)
+                for n in sorted(names)
+                if n.endswith(".parquet") and not n.startswith(("_", "."))
+            ]
+            if files:
+                break
+    if not files:
+        return None
+    raw = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
+def release_checkpoint(df) -> None:
+    """Drop the blocks of a ``localCheckpoint()`` frame now rather than
+    when the JVM garbage-collects it.  Only for a frame no plan will
+    run again: its lineage is gone, so a later read fails."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def read_batch(spark, store: str, batch_id: str):

@@ -22,7 +22,9 @@ O(log diameter) rounds — a 2^10-node path converges in ~10 rounds, not
 1024.  Each round is a constant number of key-partitioned shuffles
 (neighbor join + min-aggregate + label self-join), all Catalyst-planned
 hash joins/aggregates; `localCheckpoint` truncates lineage each round so
-the plan doesn't grow (the standard iterative-Spark requirement).
+the plan doesn't grow (the standard iterative-Spark requirement).  The
+symmetric edge table is hashed on the hop join's key once per round,
+from edges checkpointed lazily by the first round.
 
 Convergence detection rides along: labels only ever decrease, so a
 round that lowers no node's label has reached the fixed point.  Each
@@ -39,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from physicsnemo_curator_spark.core.jobs import job_label
 
 __all__ = ["connected_components", "dedup_groups"]
 
@@ -68,10 +72,21 @@ def connected_components(
         .filter(F.col("n") != F.col("m"))
         .filter(F.col("n").isNotNull() & F.col("m").isNotNull())
     )
-    # symmetrize once; dedup to bound the per-round join width
-    und = e.union(e.select(F.col("m").alias("n"), F.col("n").alias("m"))).distinct()
     if checkpoint:
-        und = und.localCheckpoint(eager=False)
+        # lazily: the first round computes the edges, later rounds read
+        # them (checkpointing after the shuffle below would cost a job
+        # of its own under AQE, and the checkpoint would forget the
+        # partitioning that shuffle gives)
+        with job_label(e.sparkSession, "components.connected_components/edges"):
+            e = e.localCheckpoint(eager=False)
+    # symmetrize; dedup to bound the per-round join width.  Hashed on
+    # m, the hop join's key, so one shuffle both dedups the edges and
+    # serves the join.
+    und = (
+        e.union(e.select(F.col("m").alias("n"), F.col("n").alias("m")))
+        .repartition("m")
+        .distinct()
+    )
 
     # hop-0 initialization: label(n) = min(n, min neighbor) — the same
     # shuffle the old identity init paid for its distinct(), but the
@@ -96,11 +111,12 @@ def connected_components(
             obs,
             F.count(F.when(F.col("comp") != F.col("old"), 1)).alias("changed"),
         ).select("node", "comp")
-        if checkpoint:
-            lab = observed.localCheckpoint(eager=True)
-        else:
-            observed.count()
-            lab = lab.select("node", "comp")
+        with job_label(lab.sparkSession, "components.connected_components/round"):
+            if checkpoint:
+                lab = observed.localCheckpoint(eager=True)
+            else:
+                observed.count()
+                lab = lab.select("node", "comp")
         return lab, obs.get["changed"]
 
     for _ in range(max_iter):
@@ -165,10 +181,15 @@ def dedup_groups(
     policy real curation runs want: dedup should discard the *worse*
     copies.  Cost is one extra id-keyed join and a per-component
     max-struct aggregate — same shuffle class as the size count.
+
+    ``group_size`` is a count over a ``comp`` window, so a caller that
+    does not read it pays nothing for it: column pruning drops the
+    window from the plan.
     """
     comp = connected_components(pairs, src, dst, max_iter=max_iter)
-    sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("group_size"))
-    out = comp.join(sizes, "comp")
+    out = comp.withColumn(
+        "group_size", F.count(F.lit(1)).over(Window.partitionBy("comp"))
+    )
     if scores is None:
         return out.select(
             F.col("node").alias(id_out),

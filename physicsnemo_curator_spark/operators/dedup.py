@@ -21,10 +21,12 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.jobs import job_label
 from physicsnemo_curator_spark.core.store import (
     held_lease,
     maintenance_root,
     memoized_parquet,
+    release_checkpoint,
     validate_batch_id,
     verify_lease,
     write_batch_partitioned,
@@ -47,13 +49,33 @@ def rebalance_narrow(df: DataFrame, key: str | None = None) -> DataFrame:
     small parquet file locally; a handful of splits on a cluster)
     serializes that CPU-heavy stretch onto a few cores.  One cheap
     shuffle of the raw docs (pre-explode, so bytes are small) buys
-    full-width parallelism for everything downstream.  No-op when the
-    scan is already at least core-wide.
+    full-width parallelism for everything downstream.
+
+    Decided from the physical plan, never by running the input:
+    counting the partitions of a plan with an exchange makes AQE run
+    its query stages.  A shuffled input is already shuffle-wide (AQE
+    narrows it only to what its bytes need) and is returned as is; an
+    exchange-free plan (scans and narrow transforms) knows its
+    partition count from planning alone and is repartitioned when that
+    count is below the parallelism.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
+    if _exchanges(df._jdf.queryExecution().executedPlan()):
+        return df
     if df.rdd.getNumPartitions() >= par:
         return df
     return df.repartition(par, key) if key is not None else df.repartition(par)
+
+
+def _exchanges(plan) -> bool:
+    """True when a physical plan shuffles, broadcasts or runs a
+    subquery — anything whose partitions (or preparation) only
+    execution settles.  AQE wraps exactly those plans."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan" or "Exchange" in name or not plan.subqueries().isEmpty():
+        return True
+    kids = plan.children()
+    return any(_exchanges(kids.apply(i)) for i in range(kids.size()))
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -176,18 +198,20 @@ def minhash_signatures(
     hex strings — slower, but bit-for-bit reproducible in any engine
     with an md5() (the DuckDB correctness oracle replays it).
     """
+    return shingles.groupBy("doc_id").agg(*_minhash_aggs(num_hashes, seed, hash_fn))
+
+
+def _minhash_aggs(num_hashes: int, seed: int, hash_fn: str) -> list[Column]:
     # single expr() parses instead of ~4 py4j round trips per hash
     if hash_fn == "md5":
-        aggs = [
+        return [
             F.expr(f"min(md5(concat(shingle, ':{i}')))").alias(f"h{i}")
             for i in range(num_hashes)
         ]
-    else:
-        aggs = [
-            F.expr(f"min(xxhash64(shingle, {seed + i}))").alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    return shingles.groupBy("doc_id").agg(*aggs)
+    return [
+        F.expr(f"min(xxhash64(shingle, {seed + i}))").alias(f"h{i}")
+        for i in range(num_hashes)
+    ]
 
 
 def band_table(
@@ -259,21 +283,27 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (or all co-shingled
     pairs when candidates is None — only sane at test scale).
+    ``shingles`` holds each doc's shingles once (as ``shingle_table``
+    emits them).  Output: distinct (a, b, jaccard) with a < b for pairs
+    sharing at least one shingle.
 
-    |A∩B| from a shingle-keyed self-join; |A| and |B| from per-doc
-    counts; J = inter / (|A| + |B| - inter).  With candidates given,
-    the self-join runs only over docs that appear in some candidate
-    pair (semi-join pre-filter) — at LSH selectivity that shrinks the
-    verify join from corpus-wide to a sliver.
+    Without candidates, |A∩B| comes from a shingle-keyed self-join and
+    |A|, |B| from per-doc counts: J = inter / (|A| + |B| - inter).
+    With candidates given, each doc's shingle set is built once (one
+    ``collect_set`` aggregate), attached to both sides of every
+    candidate pair by two id joins, and intersected per pair
+    (``size(array_intersect)``) — no shingle-keyed join, so a
+    boilerplate shingle costs no df² rows, and the plan shuffles the
+    shingles once, into per-doc sets, instead of into a sizes
+    aggregate, a candidate-doc filter, a self-join and a pair count.
 
     ``max_df`` drops shingles appearing in more than that many docs
-    BEFORE the self-join (mirroring winnow_candidate_pairs): each
-    boilerplate/stopword shingle otherwise contributes df² join rows —
-    the quadratic hot-key blowup at corpus scale.  Jaccard is then
-    computed over the pruned shingle space (sizes and intersections
-    both exclude pruned shingles — the standard stopword-pruned
-    near-dup semantics); a pair sharing only pruned shingles yields no
-    output row.
+    first (mirroring winnow_candidate_pairs): each boilerplate/stopword
+    shingle otherwise contributes df² self-join rows — the quadratic
+    hot-key blowup at corpus scale.  Jaccard is then computed over the
+    pruned shingle space (sizes and intersections both exclude pruned
+    shingles — the standard stopword-pruned near-dup semantics); a pair
+    sharing only pruned shingles yields no output row.
     """
     if max_df is not None:
         rare = (
@@ -284,37 +314,52 @@ def jaccard_pairs(
         )
         # shuffle keys on shingle — co-partitioned with the self-join
         shingles = shingles.join(rare, "shingle", "left_semi")
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    verify_shingles = shingles
     if candidates is not None:
-        cand_docs = candidates.select(
-            F.explode(F.array("a", "b")).alias("doc_id")
-        ).distinct()
-        # no broadcast hint: the candidate set is data-dependent and
-        # unbounded (AQE broadcasts it when it is actually small)
-        verify_shingles = shingles.join(cand_docs, "doc_id", "left_semi")
-    s1 = verify_shingles.alias("s1")
-    s2 = verify_shingles.alias("s2")
+        return _set_jaccard(
+            candidates,
+            shingles.groupBy("doc_id").agg(F.collect_set("shingle").alias("s")),
+        )
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    s1 = shingles.alias("s1")
+    s2 = shingles.alias("s2")
     inter = (
         s1.join(s2, (F.col("s1.shingle") == F.col("s2.shingle")) & (F.col("s1.doc_id") < F.col("s2.doc_id")))
         .groupBy(F.col("s1.doc_id").alias("a"), F.col("s2.doc_id").alias("b"))
         .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    if candidates is not None:
-        inter = inter.join(candidates, ["a", "b"], "left_semi")
-    out = (
-        inter.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sz_a"), "a")
+        .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sz_a"), "a")
         .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "sz_b"), "b")
+    )
+    return inter.select("a", "b", _jaccard())
+
+
+def _set_jaccard(candidates: DataFrame, sets: DataFrame) -> DataFrame:
+    """(a, b, jaccard) for the distinct candidate pairs with a < b whose
+    shingle sets (``sets``: doc_id, s) share at least one shingle."""
+    # no broadcast hint: the candidate set is data-dependent and
+    # unbounded (AQE broadcasts a side when it is actually small)
+    return (
+        candidates.select("a", "b")
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+        .join(sets.select(F.col("doc_id").alias("a"), F.col("s").alias("sa")), "a")
+        .join(sets.select(F.col("doc_id").alias("b"), F.col("s").alias("sb")), "b")
         .select(
             "a",
             "b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
+            F.size(F.array_intersect("sa", "sb")).alias("inter"),
+            F.size("sa").alias("sz_a"),
+            F.size("sb").alias("sz_b"),
         )
+        .filter(F.col("inter") > 0)
+        .select("a", "b", _jaccard())
     )
-    return out
+
+
+def _jaccard() -> Column:
+    return (
+        F.col("inter").cast("double")
+        / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
+    ).alias("jaccard")
 
 
 def minhash_near_duplicates(
@@ -346,13 +391,11 @@ def minhash_near_duplicates(
     sh = shingles
     if sh is None:
         sh = shingle_table(docs, text_col, id_col, shingle_k, unit=shingle_unit)
-        # the shingle subtree feeds both signing and verification, and
-        # the candidate set feeds both the doc prefilter and the pair
-        # semi-join — persist both so neither expensive subtree
-        # recomputes (at cluster scale these spill, not recompute)
+        # the shingle subtree feeds both signing and verification —
+        # persist so it does not recompute (at cluster scale it spills)
         sh = sh.persist()
     sigs = minhash_signatures(sh, num_hashes, seed, hash_fn=hash_fn)
-    cand = lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn).persist()
+    cand = lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn)
     return jaccard_pairs(sh, cand, max_df=max_df).filter(
         F.col("jaccard") >= F.lit(threshold)
     )
@@ -595,8 +638,8 @@ def winnow_near_duplicates(
     complementary recall profiles over the same pair-verify machinery."""
     cand = winnow_candidate_pairs(
         docs, text_col=text_col, id_col=id_col, k=k, window=window
-    ).persist()
-    sh = shingle_table(docs, text_col, id_col, shingle_k, unit="word").persist()
+    )
+    sh = shingle_table(docs, text_col, id_col, shingle_k, unit="word")
     return jaccard_pairs(sh, cand).filter(F.col("jaccard") >= F.lit(threshold))
 
 
@@ -665,24 +708,50 @@ def write_minhash_store(
             )
     validate_batch_id(batch_id)
     sh = shingle_table(docs, text_col, id_col, shingle_k, unit="word")
-    sigs = minhash_signatures(sh, num_hashes, seed, hash_fn=hash_fn)
+    # both tables derive from the signatures: sign once, release after
+    # the bands write
+    sigs = minhash_signatures(sh, num_hashes, seed, hash_fn=hash_fn).persist()
+    try:
+        if _fence is not None:
+            verify_lease(*_fence)
+        _write_store_tables(
+            sigs, store, num_hashes=num_hashes, bands=bands, hash_fn=hash_fn,
+            mode=mode, batch_id=batch_id, op="write_minhash_store",
+        )
+    finally:
+        sigs.unpersist()
+    if _fence is not None:
+        verify_lease(*_fence)
+
+
+def _write_store_tables(
+    sigs: DataFrame,
+    store: str,
+    *,
+    num_hashes: int,
+    bands: int,
+    hash_fn: str,
+    mode: str,
+    batch_id: str,
+    op: str,
+) -> None:
+    """Write one batch's signatures and its band rows (bucket-clustered)
+    into the store's ``_batch=<id>`` partitions."""
     tag = F.lit(batch_id)
-    if _fence is not None:
-        verify_lease(*_fence)
-    write_batch_partitioned(
-        sigs.withColumn("_batch", tag),
-        os.path.join(store, "signatures"),
-        mode=mode,
-    )
-    bt = band_table(sigs, num_hashes, bands, hash_fn=hash_fn)
-    write_batch_partitioned(
-        bt.withColumn("_batch", tag),
-        os.path.join(store, "bands"),
-        mode=mode,
-        repartition_cols=("band", "bucket"),
-    )
-    if _fence is not None:
-        verify_lease(*_fence)
+    spark = sigs.sparkSession
+    with job_label(spark, f"dedup.{op}/signatures"):
+        write_batch_partitioned(
+            sigs.withColumn("_batch", tag),
+            os.path.join(store, "signatures"),
+            mode=mode,
+        )
+    with job_label(spark, f"dedup.{op}/bands"):
+        write_batch_partitioned(
+            band_table(sigs, num_hashes, bands, hash_fn=hash_fn).withColumn("_batch", tag),
+            os.path.join(store, "bands"),
+            mode=mode,
+            repartition_cols=("band", "bucket"),
+        )
 
 
 def sig_agreement(
@@ -751,10 +820,16 @@ def incremental_near_duplicates(
     (same K, bands, seed, hash_fn — the store does not self-describe;
     a mismatch silently yields zero corpus matches).
 
-    Plan shape: the batch is signed once (O(batch shingles)); the
-    corpus probe joins the batch's K/bands band rows against the
-    bucket-partitioned store (touching only matching buckets), then one
-    signature join per matched pair.  Nothing scans the corpus text.
+    Plan shape: one aggregate over the batch's shingles gives each new
+    doc its signature and its shingle set, materialized once (one
+    checkpoint, released when the call returns its materialized
+    result).  The corpus probe joins the batch's K/bands band rows
+    against the bucket-partitioned store (touching only matching
+    buckets), then one signature join per matched pair; the in-batch
+    pairs are banded candidates verified on the shingle sets
+    (:func:`jaccard_pairs`' candidate path).  The store's schema comes
+    from its parquet footers, so reading it runs no inference job.
+    Nothing scans the corpus text.
 
     ``update_store=True`` (requires ``batch_id``) writes the batch's
     signatures/bands after computing pairs, into the batch's own
@@ -784,82 +859,87 @@ def incremental_near_duplicates(
         raise ValueError("update_store=True needs a batch_id")
     if update_store:
         validate_batch_id(batch_id)
-    sh = shingle_table(new_docs, text_col, id_col, shingle_k, unit="word").persist()
-    sigs = minhash_signatures(sh, num_hashes, seed, hash_fn=hash_fn).persist()
-    new_bands = band_table(sigs, num_hashes, bands, hash_fn=hash_fn)
+    sh = shingle_table(new_docs, text_col, id_col, shingle_k, unit="word")
+    with job_label(spark, "dedup.incremental_near_duplicates/probe"):
+        # each new doc's signature and shingle set come from ONE
+        # aggregate over its shingles, materialized once: every probe
+        # join below reads this frame.  A checkpoint, not a persist:
+        # under AQE every reference to a persisted frame runs a job of
+        # its own to read the cache.
+        signed = sh.groupBy("doc_id").agg(
+            *_minhash_aggs(num_hashes, seed, hash_fn),
+            F.collect_set("shingle").alias("_set"),
+        ).localCheckpoint()
+        sigs = signed.drop("_set")
+        try:
+            # memoized_parquet: the plan memo skips the file listing
+            # when the store is unchanged, and a changed store is read
+            # with the schema from its footers — no inference job
+            corpus_sigs = memoized_parquet(
+                spark, os.path.join(store, "signatures")
+            ).drop("_batch")
+            corpus_bands = memoized_parquet(
+                spark, os.path.join(store, "bands")
+            ).drop("_batch")
 
-    # memoized_parquet: a steady-state ingest loop probes the same
-    # store generation per batch — the plan memo skips the per-call
-    # file listing + footer-inference Spark job (2 jobs/probe here);
-    # any store mutation changes the identity token and re-reads
-    corpus_sigs = memoized_parquet(
-        spark, os.path.join(store, "signatures")
-    ).drop("_batch")
-    corpus_bands = memoized_parquet(
-        spark, os.path.join(store, "bands")
-    ).drop("_batch")
-
-    # new vs corpus: bucket-equality probe → distinct id pairs →
-    # estimate.  The batch's band rows are K/bands × batch docs — tiny
-    # next to the corpus store — so both the probe and the pair joins
-    # broadcast the batch side: the corpus tables are only ever
-    # scanned, never shuffled.
-    probe = (
-        corpus_bands.alias("c")
-        .join(
-            F.broadcast(new_bands.alias("n")),
-            (F.col("c.band") == F.col("n.band"))
-            & (F.col("c.bucket") == F.col("n.bucket")),
-        )
-        .select(F.col("c.doc_id").alias("a"), F.col("n.doc_id").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    vs_corpus = (
-        sig_agreement(
-            corpus_sigs, probe, sigs, num_hashes, broadcast_pairs=True
-        )
-        .filter(F.col("jaccard_est") >= F.lit(threshold))
-        .select("a", "b", F.col("jaccard_est").alias("jaccard"), F.lit("corpus").alias("scope"))
-    )
-
-    # new vs new: exact verify, the batch path.  cand feeds both the
-    # candidate-doc prefilter and the pair semi-join inside
-    # jaccard_pairs — persist so the band self-join runs once (the
-    # batch path does the same)
-    cand = lsh_candidate_pairs(
-        sigs, num_hashes, bands, hash_fn=hash_fn
-    ).persist()
-    vs_batch = (
-        jaccard_pairs(sh, cand)
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("a", "b", "jaccard", F.lit("batch").alias("scope"))
-    )
-    out = vs_corpus.unionByName(vs_batch)
-    if not materialize:
-        # caller wants the lazy plan (e.g. to inspect or extend it);
-        # the per-batch caches stay theirs to release
-        return out
-    # materialize the result, then release the per-batch caches — a
-    # steady-state ingest loop would otherwise pin two cached datasets
-    # per call for the session's lifetime
-    out = out.localCheckpoint(eager=True)
-    if update_store:
-        if _fence is not None:
-            verify_lease(*_fence)
-        tag = F.lit(batch_id)
-        for name, frame in (
-            ("signatures", sigs),
-            ("bands", new_bands.repartition("band", "bucket")),
-        ):
-            write_batch_partitioned(
-                frame.withColumn("_batch", tag),
-                os.path.join(store, name),
-                mode="append",
+            # new vs corpus: bucket-equality probe → distinct id pairs
+            # → estimate.  The batch's band rows are K/bands × batch
+            # docs — tiny next to the corpus store — so both the probe
+            # and the pair joins broadcast the batch side: the corpus
+            # tables are only ever scanned, never shuffled.
+            new_bands = band_table(sigs, num_hashes, bands, hash_fn=hash_fn)
+            probe = (
+                corpus_bands.alias("c")
+                .join(
+                    F.broadcast(new_bands.alias("n")),
+                    (F.col("c.band") == F.col("n.band"))
+                    & (F.col("c.bucket") == F.col("n.bucket")),
+                )
+                .select(
+                    F.col("c.doc_id").alias("a"), F.col("n.doc_id").alias("b")
+                )
+                .filter(F.col("a") != F.col("b"))
+                .distinct()
             )
-        if _fence is not None:
-            verify_lease(*_fence)
-    cand.unpersist()
-    sigs.unpersist()
-    sh.unpersist()
+            vs_corpus = (
+                sig_agreement(
+                    corpus_sigs, probe, sigs, num_hashes, broadcast_pairs=True
+                )
+                .filter(F.col("jaccard_est") >= F.lit(threshold))
+                .select(
+                    "a",
+                    "b",
+                    F.col("jaccard_est").alias("jaccard"),
+                    F.lit("corpus").alias("scope"),
+                )
+            )
+            # new vs new: exact verify of the banded candidates
+            cand = lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn)
+            sets = signed.select("doc_id", F.col("_set").alias("s"))
+            vs_batch = (
+                _set_jaccard(cand, sets)
+                .filter(F.col("jaccard") >= F.lit(threshold))
+                .select("a", "b", "jaccard", F.lit("batch").alias("scope"))
+            )
+            out = vs_corpus.unionByName(vs_batch)
+            if not materialize:
+                # caller wants the lazy plan (e.g. to inspect or extend
+                # it); the batch's signatures stay alive for it
+                return out
+            out = out.localCheckpoint(eager=True)
+            if update_store:
+                if _fence is not None:
+                    verify_lease(*_fence)
+                _write_store_tables(
+                    sigs, store, num_hashes=num_hashes, bands=bands,
+                    hash_fn=hash_fn, mode="append", batch_id=batch_id,
+                    op="incremental_near_duplicates",
+                )
+                if _fence is not None:
+                    verify_lease(*_fence)
+        finally:
+            if materialize:
+                # a steady-state ingest loop would otherwise pin the
+                # batch's signatures for the session's lifetime
+                release_checkpoint(signed)
     return out

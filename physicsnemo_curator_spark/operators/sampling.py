@@ -31,10 +31,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.jobs import job_label
 from physicsnemo_curator_spark.core.store import (
     carry_surviving,
     held_lease,
     maintenance_root,
+    memoized_parquet,
     read_batch,
     validate_batch_id,
     verify_lease,
@@ -242,13 +244,15 @@ def _guarded_groups(groups: DataFrame, id_col: str, who: str) -> DataFrame:
     re-runs), while an id claimed by TWO components — a genuine
     upstream bug that would silently fan the doc out into two output
     rows — raises at execution, the snapshot_diff convention.  The
-    groups frame is pair-ids only, so the extra aggregate is small."""
+    groups frame is pair-ids only, so the extra aggregate is small;
+    ``max != min`` is the two-components test in that one aggregate
+    (a ``count_distinct`` would plan a second shuffle)."""
     g = groups.groupBy(F.col(id_col).alias("_gid")).agg(
-        F.count_distinct(F.col("component")).alias("_nc"),
+        F.max(F.col("component")).alias("_cmax"),
         F.min(F.col("component")).alias("component"),
     )
     guard = F.when(
-        F.col("_nc") > 1,
+        F.col("_cmax") != F.col("component"),
         F.raise_error(
             F.concat(
                 F.lit(
@@ -333,30 +337,31 @@ def write_split_store(
         ),
     ]
     out = assignments.select(*cols)
-    prev = (
-        read_batch(assignments.sparkSession, store, batch_id)
-        if mode == "append"
-        else None
-    )
-    if prev is not None:
-        # materialize the incoming rows so the carry's anti-join and
-        # the write below see the same id set even for a
-        # non-deterministic input plan, then carry the batch's
-        # surviving stored rows through the partition rewrite
-        out = out.localCheckpoint()
-        surviving = carry_surviving(
-            prev.select("doc_id", "split", "component", "reason"),
-            out.select("doc_id"),
-            "doc_id",
+    with job_label(assignments.sparkSession, "sampling.write_split_store/write"):
+        prev = (
+            read_batch(assignments.sparkSession, store, batch_id)
+            if mode == "append"
+            else None
         )
-        out = out.unionByName(surviving)
-    if _fence is not None:
-        # fencing before the commit: a holder whose TTL lapsed (and
-        # was stolen from) must not write a row
-        verify_lease(*_fence)
-    write_batch_partitioned(
-        out.withColumn("_batch", F.lit(batch_id)), store, mode=mode
-    )
+        if prev is not None:
+            # materialize the incoming rows so the carry's anti-join and
+            # the write below see the same id set even for a
+            # non-deterministic input plan, then carry the batch's
+            # surviving stored rows through the partition rewrite
+            out = out.localCheckpoint()
+            surviving = carry_surviving(
+                prev.select("doc_id", "split", "component", "reason"),
+                out.select("doc_id"),
+                "doc_id",
+            )
+            out = out.unionByName(surviving)
+        if _fence is not None:
+            # fencing before the commit: a holder whose TTL lapsed (and
+            # was stolen from) must not write a row
+            verify_lease(*_fence)
+        write_batch_partitioned(
+            out.withColumn("_batch", F.lit(batch_id)), store, mode=mode
+        )
     if _fence is not None:
         verify_lease(*_fence)
 
@@ -418,8 +423,11 @@ def assign_splits_incremental(
     runs over those pruned frames with the strategy left to Spark/AQE
     (batch-bounded in the common case and auto-broadcast; a
     mega-component is legitimately large, so nothing forces a
-    broadcast).  The per-split decision is a projection; no
-    corpus-sized shuffle exists anywhere.  ``update_store=True``
+    broadcast).  The new ids and the pruned group map are each
+    computed once (persisted for the store probe and the decision,
+    released before returning); the guards are single aggregates
+    (``max != min``, not a second ``count_distinct`` shuffle).  The
+    per-split decision is a projection.  ``update_store=True``
     (requires ``batch_id``) upserts the non-stored rows under
     ``_batch=<id>`` (idempotent re-runs; a partial re-run carries the
     batch's earlier rows — see :func:`write_split_store`).
@@ -456,59 +464,6 @@ def assign_splits_incremental(
             f"quarantine_split {quarantine_split!r} is not a label in "
             f"weights {sorted(weights)}"
         )
-    stored = spark.read.parquet(store).select("doc_id", "split")
-    g = _guarded_groups(groups, id_col, "assign_splits_incremental")
-    new_ids = new_docs.select(F.col(id_col).alias("doc_id")).distinct()
-    # prune the group map FIRST: `groups` covers every id in any
-    # near-dup pair — corpus-scale on a dup-heavy corpus — but only
-    # components containing a NEW doc can influence any decision
-    # below, so two semi-joins cut it to the touched components and
-    # their members before anything fans out.  Join strategies are
-    # left to Spark/AQE on purpose (the _apply_tombstones reasoning):
-    # the pruned frames are batch-bounded in the common case, but a
-    # mega-component makes them legitimately large and a FORCED
-    # broadcast would OOM the driver.
-    new_comps = (
-        g.join(new_ids.withColumnRenamed("doc_id", "_gid"), "_gid", "left_semi")
-        .select("component")
-        .distinct()
-    )
-    g_rel = g.join(new_comps, "component", "left_semi")
-    # ONE pass over the corpus-sized store: semi-join down to the rows
-    # any decision below can touch (the new ids and the touched
-    # components' member ids), materialized so the two lookups don't
-    # rescan the store
-    probe_ids = new_ids.unionByName(
-        g_rel.select(F.col("_gid").alias("doc_id"))
-    ).distinct()
-    relevant = stored.join(probe_ids, "doc_id", "left_semi").localCheckpoint()
-    hit = relevant.select("doc_id", F.col("split").alias("_stored_split"))
-    comp_splits = (
-        g_rel.join(
-            relevant.select(F.col("doc_id").alias("_gid"), "split"), "_gid"
-        )
-        .groupBy("component")
-        .agg(
-            F.count_distinct("split").alias("_ns"),
-            F.min("split").alias("_inherit"),
-        )
-    )
-    keyed = (
-        new_ids.join(g_rel, new_ids["doc_id"] == g_rel["_gid"], "left")
-        .drop("_gid")
-        .join(hit, "doc_id", "left")
-        .join(comp_splits, "component", "left")
-    )
-    fresh = assign_splits(
-        keyed.withColumn(
-            "_split_key", F.coalesce(F.col("component"), F.col("doc_id"))
-        ),
-        "_split_key",
-        weights,
-        seed=seed,
-        hash_fn=hash_fn,
-        split_col="_fresh",
-    )
     if merge_policy == "quarantine":
         merged = F.lit(quarantine_split)
     else:
@@ -525,38 +480,104 @@ def assign_splits_incremental(
                 ),
             )
         )
-    split = (
-        F.when(F.col("_stored_split").isNotNull(), F.col("_stored_split"))
-        .when(F.col("_ns") > 1, merged)
-        .when(F.col("_ns") == 1, F.col("_inherit"))
-        .otherwise(F.col("_fresh"))
+    g = _guarded_groups(groups, id_col, "assign_splits_incremental")
+    # the new ids and the pruned group map each feed both actions
+    # below (the store probe and the decision): materialize each once,
+    # release both once the decision is materialized
+    new_ids = new_docs.select(F.col(id_col).alias("doc_id")).distinct().persist()
+    # prune the group map FIRST: `groups` covers every id in any
+    # near-dup pair — corpus-scale on a dup-heavy corpus — but only
+    # components containing a NEW doc can influence any decision
+    # below, so two semi-joins cut it to the touched components and
+    # their members before anything fans out.  Join strategies are
+    # left to Spark/AQE on purpose (the _apply_tombstones reasoning):
+    # the pruned frames are batch-bounded in the common case, but a
+    # mega-component makes them legitimately large and a FORCED
+    # broadcast would OOM the driver.
+    new_comps = (
+        g.join(new_ids.withColumnRenamed("doc_id", "_gid"), "_gid", "left_semi")
+        .select("component")
+        .distinct()
     )
-    reason = (
-        F.when(F.col("_stored_split").isNotNull(), F.lit("stored"))
-        .when(F.col("_ns") > 1, F.lit("quarantined"))
-        .when(F.col("_ns") == 1, F.lit("inherited"))
-        .otherwise(F.lit("fresh"))
-    )
-    out = fresh.select(
-        "doc_id",
-        "component",
-        split.alias(split_col),
-        reason.alias("reason"),
-    )
-    if update_store:
-        # materialize BEFORE mutating the store the plan reads, and
-        # write only the genuinely-new rows — stored docs are never
-        # rewritten, so the store stays unique per doc_id
-        out = out.localCheckpoint()
-        write_split_store(
-            out.filter(F.col("reason") != "stored").withColumnRenamed(
-                split_col, "split"
-            ),
-            store,
-            mode="append",
-            batch_id=batch_id,
-            _fence=_fence,
+    g_rel = g.join(new_comps, "component", "left_semi").persist()
+    try:
+        with job_label(spark, "sampling.assign_splits_incremental/probe"):
+            stored = memoized_parquet(spark, store).select("doc_id", "split")
+            # ONE pass over the corpus-sized store: semi-join down to
+            # the rows any decision below can touch (the new ids and
+            # the touched components' member ids), materialized so the
+            # two lookups don't rescan the store
+            probe_ids = new_ids.unionByName(
+                g_rel.select(F.col("_gid").alias("doc_id"))
+            ).distinct()
+            relevant = stored.join(probe_ids, "doc_id", "left_semi").localCheckpoint()
+        hit = relevant.select("doc_id", F.col("split").alias("_stored_split"))
+        # one split among a component's stored members is max == min
+        # (a count_distinct would plan a second shuffle)
+        comp_splits = (
+            g_rel.join(
+                relevant.select(F.col("doc_id").alias("_gid"), "split"), "_gid"
+            )
+            .groupBy("component")
+            .agg(
+                F.max("split").alias("_smax"),
+                F.min("split").alias("_inherit"),
+            )
         )
+        keyed = (
+            new_ids.join(g_rel, new_ids["doc_id"] == g_rel["_gid"], "left")
+            .drop("_gid")
+            .join(hit, "doc_id", "left")
+            .join(comp_splits, "component", "left")
+        )
+        fresh = assign_splits(
+            keyed.withColumn(
+                "_split_key", F.coalesce(F.col("component"), F.col("doc_id"))
+            ),
+            "_split_key",
+            weights,
+            seed=seed,
+            hash_fn=hash_fn,
+            split_col="_fresh",
+        )
+        split = (
+            F.when(F.col("_stored_split").isNotNull(), F.col("_stored_split"))
+            .when(F.col("_smax") != F.col("_inherit"), merged)
+            .when(F.col("_inherit").isNotNull(), F.col("_inherit"))
+            .otherwise(F.col("_fresh"))
+        )
+        reason = (
+            F.when(F.col("_stored_split").isNotNull(), F.lit("stored"))
+            .when(F.col("_smax") != F.col("_inherit"), F.lit("quarantined"))
+            .when(F.col("_inherit").isNotNull(), F.lit("inherited"))
+            .otherwise(F.lit("fresh"))
+        )
+        out = fresh.select(
+            "doc_id",
+            "component",
+            split.alias(split_col),
+            reason.alias("reason"),
+        )
+        if update_store:
+            # materialize BEFORE mutating the store the plan reads, and
+            # write only the genuinely-new rows — stored docs are never
+            # rewritten, so the store stays unique per doc_id
+            with job_label(spark, "sampling.assign_splits_incremental/decide"):
+                out = out.localCheckpoint()
+            write_split_store(
+                out.filter(F.col("reason") != "stored").withColumnRenamed(
+                    split_col, "split"
+                ),
+                store,
+                mode="append",
+                batch_id=batch_id,
+                _fence=_fence,
+            )
+    finally:
+        # without update_store the returned plan is lazy and recomputes
+        # both frames from their lineage when the caller runs it
+        new_ids.unpersist()
+        g_rel.unpersist()
     return out
 
 

@@ -19,6 +19,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.jobs import job_label
+
 __all__ = [
     "distinct_sketches",
     "merge_sketch_tables",
@@ -97,9 +99,10 @@ def append_sketch_store(
     sk = distinct_sketches(
         df, group_cols, value_col, lg_config_k=lg_config_k
     ).withColumn("batch_id", F.lit(batch_id))
-    sk.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("batch_id").parquet(store)
+    with job_label(df.sparkSession, "sketches.append_sketch_store/write"):
+        sk.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(store)
 
 
 def read_sketch_store(

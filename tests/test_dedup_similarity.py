@@ -182,3 +182,65 @@ def test_sq8_constant_dimension_codes_zero(spark):
     ).collect()
     for r in rec:
         assert r["r"][1] == 7.0
+
+
+def _random_corpus(spark, n_docs: int = 60, seed: int = 3):
+    """Docs over a 40-word vocabulary; every third doc copies an earlier
+    one with a few words changed, so the corpus has pairs at every
+    Jaccard level."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(40)]
+    texts: list[str] = []
+    for i in range(n_docs):
+        if i % 3 == 2:
+            words = texts[rng.randrange(i)].split()
+            for _ in range(rng.randint(1, 4)):
+                words[rng.randrange(len(words))] = rng.choice(vocab)
+        else:
+            words = [rng.choice(vocab) for _ in range(rng.randint(5, 25))]
+        texts.append(" ".join(words))
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+
+def test_jaccard_pairs_candidates_match_filtered_full_path(spark):
+    """With candidates, jaccard_pairs returns exactly the candidate-free
+    rows restricted to the candidate pairs — duplicate and reversed
+    candidates included — with and without max_df."""
+    import random
+
+    docs = _random_corpus(spark)
+    sh = dedup.shingle_table(docs, k=2, unit="word")
+    rng = random.Random(7)
+    cand = [(a, b) for a in range(60) for b in range(60) if a != b and rng.random() < 0.3]
+    cand += cand[:20]  # duplicates
+    candidates = spark.createDataFrame(cand, "a long, b long")
+    keep = set(cand)
+    for max_df in (None, 4):
+        full = {
+            (r.a, r.b): r.jaccard
+            for r in dedup.jaccard_pairs(sh, max_df=max_df).collect()
+            if (r.a, r.b) in keep
+        }
+        got = dedup.jaccard_pairs(sh, candidates, max_df=max_df).collect()
+        assert len(got) == len({(r.a, r.b) for r in got})
+        assert {(r.a, r.b): r.jaccard for r in got} == full
+        assert full  # the corpus has shared shingles among the candidates
+
+
+def test_rebalance_narrow_runs_no_job(spark, tmp_path):
+    """rebalance_narrow decides from the plan: a shuffled input is
+    returned as is without running it, and a one-file scan is still
+    spread to the cluster's parallelism — neither costs a Spark job."""
+    path = str(tmp_path / "docs.parquet")
+    _random_corpus(spark, 20).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    shuffled = docs.join(docs.groupBy("doc_id").count(), "doc_id", "left_anti")
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    same = dedup.rebalance_narrow(shuffled, "doc_id")
+    spread = dedup.rebalance_narrow(docs, "doc_id")
+    assert set(st.getJobIdsForGroup(None)) == before
+    assert same is shuffled
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

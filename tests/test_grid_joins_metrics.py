@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from physicsnemo_curator_spark.core.metrics import MetricsStore
@@ -323,3 +326,21 @@ Failures
     empty = MetricsStore(str(tmp_path / "none"))
     r = empty.dashboard_report(spark, total=3)
     assert "total=3" in r and "(none)" in r
+
+
+def test_ledger_probe_absent_is_empty_and_broken_raises(spark, tmp_path):
+    """An absent local ledger reads as the empty frame without a Spark
+    job; a ledger that exists but cannot be read raises instead of
+    rendering as empty."""
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    empty = MetricsStore(str(tmp_path / "none")).stage_df(spark)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+    assert empty.columns == ["idx", "stage_name", "stage_order", "wall_time_s"]
+
+    broken = MetricsStore(str(tmp_path / "broken"))
+    os.makedirs(broken.stage_path)
+    with open(os.path.join(broken.stage_path, "part-0.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        broken.stage_df(spark).collect()

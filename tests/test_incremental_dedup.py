@@ -135,3 +135,55 @@ def test_minhash_store_lease(spark, tmp_path):
     # released: fresh acquire works
     rec2 = core_store.acquire_lease(mr)
     core_store.release_lease(mr, rec2["token"])
+
+
+def test_steady_state_ingest_op_job_budget(spark, tmp_path):
+    """One steady-state op of the incremental ingest flow
+    (examples/incremental_ingest.py: store probe, left-anti drop, store
+    append, connected components, split assignment, sketch append,
+    curated write) against stores a first batch seeded stays within
+    its Spark job budget.  Each operator computes every intermediate
+    once: a hidden action, a shared frame recomputed per consumer or an
+    aggregate whose output is dropped shows up here as extra jobs."""
+    from physicsnemo_curator_spark.operators import components, sampling, sketches
+
+    mh, splits, hll, out = (str(tmp_path / d) for d in ("mh", "split", "hll", "out"))
+    weights = {"train": 0.9, "val": 0.1}
+    seed = _mk_docs(spark, [(i, _sentence(i)) for i in range(30)]).withColumn(
+        "lang", F.lit("en")
+    )
+    dedup.write_minhash_store(seed, mh, batch_id="b0")
+    pairs0 = dedup.minhash_near_duplicates(seed, threshold=0.8)
+    groups0 = components.dedup_groups(pairs0.select("a", "b")).select("doc_id", "component")
+    sampling.write_split_store(
+        sampling.leakage_free_splits(seed, groups0, weights, seed=7).select(
+            "doc_id", "split", "component"
+        ),
+        splits,
+        batch_id="b0",
+    )
+    rows = [(100 + i, _sentence(i % 30) if i % 4 == 0 else _sentence(200 + i)) for i in range(20)]
+    rows += [(130, _sentence(201) + " tail")]  # near-dup of the fresh 101
+    path = str(tmp_path / "batch.parquet")
+    _mk_docs(spark, rows).withColumn("lang", F.lit("en")).write.parquet(path)
+
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    batch = spark.read.parquet(path)
+    pairs = dedup.incremental_near_duplicates(spark, batch, mh, threshold=0.8)
+    losers = pairs.select(F.col("b").alias("doc_id")).distinct()
+    survivors = batch.join(losers, "doc_id", "left_anti")
+    dedup.write_minhash_store(survivors, mh, mode="append", batch_id="b1")
+    groups = components.dedup_groups(pairs.select("a", "b")).select("doc_id", "component")
+    assigned = sampling.assign_splits_incremental(
+        spark, survivors, groups, weights, splits, seed=7, update_store=True, batch_id="b1"
+    )
+    sketches.append_sketch_store(survivors, hll, ["lang"], "doc_id", batch_id="b1")
+    survivors.join(assigned.select("doc_id", "split"), "doc_id").write.mode(
+        "append"
+    ).partitionBy("split").parquet(out)
+    jobs = len(set(st.getJobIdsForGroup(None)) - before)
+
+    # the copies of seed docs and the in-batch near-dup are dropped
+    assert {r.doc_id for r in losers.collect()} == {100, 104, 108, 112, 116, 130}
+    assert jobs <= 54, f"{jobs} Spark jobs for one ingest op"

@@ -110,4 +110,4 @@ def test_warm_dedup_family_reads_shared_persisted_frames(
             warm[name] = _jobs(spark, name, sf_dir, f"pcs-share-warm-{name}")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert warm == {"q_minhash_near_dup": 2, "q_dedup_components": 7}
+    assert warm == {"q_minhash_near_dup": 2, "q_dedup_components": 6}

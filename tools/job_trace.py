@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-job trace for a declared query: run it warm and print every
 Spark job the warm rep submits (job id, # stages, first stage name =
-call site).  Job counts are deterministic, so this works on a
+call site, and the operator step's job label when it set one).  Job counts are deterministic, so this works on a
 contended box where wall-clock A/Bs do not.
 
 Usage: python tools/job_trace.py q_name [q_name ...]
@@ -47,7 +47,10 @@ def main() -> None:
                 if not si.isEmpty():
                     label = si.get().name()
                     break
-            print(f"  job {jid}: {len(sids)} stages  {label}")
+            # the operator step that submitted it (core.jobs.job_label)
+            desc = jsc.statusStore().job(jid).description()
+            step = f"  [{desc.get()}]" if desc.isDefined() else ""
+            print(f"  job {jid}: {len(sids)} stages  {label}{step}")
     spark.stop()
 
 
