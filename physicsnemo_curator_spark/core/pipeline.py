@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from physicsnemo_curator_spark.core import registry
+from physicsnemo_curator_spark.core.jobs import job_label
 from physicsnemo_curator_spark.core.manifest import Manifest
+from physicsnemo_curator_spark.core.store import release
 
 
 @dataclass(frozen=True)
@@ -190,12 +192,13 @@ class Pipeline:
                         "SPARK_GRAFT_RESUME_PARTITION_CAP", "100000"
                     )
                 )
-                vals = (
-                    df.select(partition_col)
-                    .distinct()
-                    .limit(cap + 1)
-                    .collect()
-                )
+                with job_label(spark, "pipeline.run/pending"):
+                    vals = (
+                        df.select(partition_col)
+                        .distinct()
+                        .limit(cap + 1)
+                        .collect()
+                    )
                 if len(vals) > cap:
                     raise ValueError(
                         f"checkpoint partition column {partition_col!r} has "
@@ -211,10 +214,12 @@ class Pipeline:
                     return RunResult(
                         self.spec_hash, [], 0, skipped, time.perf_counter() - t0
                     )
-            rows = df.count()
-            written = registry.get_sink(self.sink.name)(df, **self.sink.params)
+            with job_label(spark, "pipeline.run/count"):
+                rows = df.count()
+            with job_label(spark, f"pipeline.run/write:{self.sink.name}"):
+                written = registry.get_sink(self.sink.name)(df, **self.sink.params)
         finally:
-            df.unpersist()
+            release(df)
         if manifest is not None:
             manifest.mark_completed(pending)
         return RunResult(

@@ -68,7 +68,7 @@ __all__ = [
     "try_local_path",
     "read_optional_parquet",
     "read_batch",
-    "release_checkpoint",
+    "release",
     "write_batch_partitioned",
     "carry_surviving",
 ]
@@ -270,11 +270,23 @@ def footer_schema(local: str):
     return StructType.fromJson(json.loads(raw)) if raw else None
 
 
-def release_checkpoint(df) -> None:
-    """Drop the blocks of a ``localCheckpoint()`` frame now rather than
-    when the JVM garbage-collects it.  Only for a frame no plan will
-    run again: its lineage is gone, so a later read fails."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+def release(*frames) -> None:
+    """Free materialized frames now rather than when the JVM
+    garbage-collects them: a ``persist()``ed frame leaves the
+    CacheManager, a ``localCheckpoint()`` frame drops its RDD's blocks,
+    and ``None`` is skipped.  The one release call of the package: the
+    function that materializes a frame releases it once its last
+    reader has run, unless it hands the frame to its caller, who then
+    owns it.  Release a checkpoint only when no plan will run it
+    again: its lineage is gone, so a later read fails."""
+    for df in frames:
+        if df is None:
+            continue
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist(blocking=False)
 
 
 def read_batch(spark, store: str, batch_id: str):
@@ -330,7 +342,8 @@ def carry_surviving(prev, incoming_keys, key_col: str):
     one batch partition, small).  ``incoming_keys`` must be the SAME
     materialized snapshot the caller writes — a non-deterministic
     input plan re-evaluated per consumer could carry a key the write
-    also produced (duplicate) or drop one it didn't (deletion)."""
+    also produced (duplicate) or drop one it didn't (deletion).  The
+    result is a local checkpoint the caller owns."""
     return prev.join(incoming_keys, key_col, "left_anti").localCheckpoint()
 
 

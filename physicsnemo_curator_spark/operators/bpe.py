@@ -29,6 +29,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.jobs import job_label
+from physicsnemo_curator_spark.core.store import release
+
 _PAIRS_EXPR = """
 filter(
     transform(tokens, (x, i) ->
@@ -208,28 +211,49 @@ def train_bpe(
     tokens instead of a merge pass plus an explode/aggregate re-read."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    tokenized = _chars_df(docs, text_col).persist()
-    cached = tokenized  # the persisted handle each round releases
+    return _train_rounds(
+        _chars_df(docs, text_col), pair_counts, n_merges, "bpe.train_bpe"
+    )
+
+
+def _train_rounds(
+    tokens: DataFrame,
+    counts,
+    n_merges: int,
+    label: str,
+    weight_col: str | None = None,
+) -> list[dict]:
+    """The merge loop both trainers share: ``counts(tokens)`` gives the
+    first argmax, then each round merges it and reads the next argmax
+    and the token total in one pass.  Each round's tokens are persisted
+    and the previous round's released once the next round has read
+    them."""
+    spark = tokens.sparkSession
+    tokens = cached = tokens.persist()
     merges: list[dict] = []
     try:
-        top = (
-            pair_counts(tokenized)
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
+        with job_label(spark, f"{label}/argmax"):
+            top = (
+                counts(tokens)
+                .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
+                .limit(1)
+                .collect()
+            )
         for rank in range(n_merges):
             if not top:
                 break  # every doc is a single token already
             a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-            fused = _merge_and_count(tokenized, a, b).persist()
-            best, n_tokens = _round_rows_fused(
-                fused, with_argmax=rank + 1 < n_merges
-            )
+            fused = _merge_and_count(
+                tokens, a, b, weight_col=weight_col
+            ).persist()
+            with job_label(spark, f"{label}/round"):
+                best, n_tokens = _round_rows_fused(
+                    fused, with_argmax=rank + 1 < n_merges
+                )
             top = [{"a": best[0], "b": best[1], "n": best[2]}] if best else []
-            cached.unpersist()
+            release(cached)
             cached = fused
-            tokenized = fused.filter(F.col("_kind") == 0).drop(
+            tokens = fused.filter(F.col("_kind") == 0).drop(
                 "_kind", "_pa", "_pb", "_pn"
             )
             merges.append(
@@ -239,7 +263,7 @@ def train_bpe(
                 }
             )
     finally:
-        cached.unpersist()
+        release(cached)
     return merges
 
 
@@ -321,41 +345,13 @@ def train_bpe_hist(
         word_freq = word_frequency_table(
             docs, text_col=text_col, pattern=pattern
         )
-    words = _word_tokens(word_freq).select("tokens", "count").persist()
-    cached = words  # the persisted handle each round releases
-    merges: list[dict] = []
-    try:
-        top = (
-            pair_counts_weighted(words)
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        for rank in range(n_merges):
-            if not top:
-                break  # every word is a single token already
-            a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-            fused = _merge_and_count(
-                words, a, b, weight_col="count"
-            ).persist()
-            best, n_tokens = _round_rows_fused(
-                fused, with_argmax=rank + 1 < n_merges
-            )
-            top = [{"a": best[0], "b": best[1], "n": best[2]}] if best else []
-            cached.unpersist()
-            cached = fused
-            words = fused.filter(F.col("_kind") == 0).drop(
-                "_kind", "_pa", "_pb", "_pn"
-            )
-            merges.append(
-                {
-                    "rank": rank, "a": a, "b": b, "count": n,
-                    "n_tokens": n_tokens,
-                }
-            )
-    finally:
-        cached.unpersist()
-    return merges
+    return _train_rounds(
+        _word_tokens(word_freq).select("tokens", "count"),
+        pair_counts_weighted,
+        n_merges,
+        "bpe.train_bpe_hist",
+        weight_col="count",
+    )
 
 
 def bpe_tokenize(

@@ -22,9 +22,10 @@ O(log diameter) rounds — a 2^10-node path converges in ~10 rounds, not
 1024.  Each round is a constant number of key-partitioned shuffles
 (neighbor join + min-aggregate + label self-join), all Catalyst-planned
 hash joins/aggregates; `localCheckpoint` truncates lineage each round so
-the plan doesn't grow (the standard iterative-Spark requirement).  The
-symmetric edge table is hashed on the hop join's key once per round,
-from edges checkpointed lazily by the first round.
+the plan doesn't grow (the standard iterative-Spark requirement), and
+each round releases the labels it supersedes.  The symmetric edge table
+is hashed on the hop join's key once per round, from edges checkpointed
+lazily by the first round and released on return.
 
 Convergence detection rides along: labels only ever decrease, so a
 round that lowers no node's label has reached the fixed point.  Each
@@ -43,6 +44,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from physicsnemo_curator_spark.core.jobs import job_label
+from physicsnemo_curator_spark.core.store import release
 
 __all__ = ["connected_components", "dedup_groups"]
 
@@ -66,19 +68,24 @@ def connected_components(
     needed are ~log2(diameter), so 50 covers any graph that fits on
     earth.  Raises RuntimeError if the bound is hit without a fixed
     point (indicates non-orderable ids or NaN keys, not scale).
+
+    With ``checkpoint`` (the default) the result is a local checkpoint
+    the caller owns; every other frame the rounds materialize is
+    released before returning.
     """
     e = (
         edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
         .filter(F.col("n") != F.col("m"))
         .filter(F.col("n").isNotNull() & F.col("m").isNotNull())
     )
+    edges_cp = None
     if checkpoint:
         # lazily: the first round computes the edges, later rounds read
         # them (checkpointing after the shuffle below would cost a job
         # of its own under AQE, and the checkpoint would forget the
         # partitioning that shuffle gives)
         with job_label(e.sparkSession, "components.connected_components/edges"):
-            e = e.localCheckpoint(eager=False)
+            e = edges_cp = e.localCheckpoint(eager=False)
     # symmetrize; dedup to bound the per-round join width.  Hashed on
     # m, the hop join's key, so one shuffle both dedups the edges and
     # serves the join.
@@ -119,6 +126,7 @@ def connected_components(
                 lab = lab.select("node", "comp")
         return lab, obs.get["changed"]
 
+    prev = None  # the last round's checkpointed labels
     for _ in range(max_iter):
         # hop: min over own label and neighbors' labels; ``old`` carries
         # each node's label into the round's output
@@ -147,10 +155,16 @@ def connected_components(
                 "node", F.least("comp", F.coalesce("pc", "po")).alias("comp"), "old"
             )
         )
+        if checkpoint:
+            # the new labels are materialized: nothing reads the old
+            release(prev)
+            prev = labels
         # labels only ever decrease, so a round that lowers none has
         # reached the fixed point
         if not changed:
+            release(edges_cp)
             return labels
+    release(edges_cp, prev)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from physicsnemo_curator_spark.core.jobs import job_label
@@ -26,7 +26,7 @@ from physicsnemo_curator_spark.core.store import (
     held_lease,
     maintenance_root,
     memoized_parquet,
-    release_checkpoint,
+    release,
     validate_batch_id,
     verify_lease,
     write_batch_partitioned,
@@ -383,17 +383,16 @@ def minhash_near_duplicates(
     the output hash-independent (deterministic given the data).
     Pass a prebuilt (ideally persisted) ``shingles`` table to share the
     shingling across operators (jaccard/minhash/simhash all consume the
-    same stream).  hash_fn='md5' makes the candidate set itself
+    same stream); the caller owns it.  hash_fn='md5' makes the candidate set itself
     engine-reproducible (see minhash_signatures).  ``max_df`` prunes
     boilerplate shingles in the verify join (see jaccard_pairs) —
     recommended at corpus scale, where a stopword shingle's df² rows
     dominate the verify shuffle even after the candidate prefilter."""
     sh = shingles
     if sh is None:
+        # read by both signing and verification, unpersisted: the
+        # returned plan is lazy, so nothing could release a persist
         sh = shingle_table(docs, text_col, id_col, shingle_k, unit=shingle_unit)
-        # the shingle subtree feeds both signing and verification —
-        # persist so it does not recompute (at cluster scale it spills)
-        sh = sh.persist()
     sigs = minhash_signatures(sh, num_hashes, seed, hash_fn=hash_fn)
     cand = lsh_candidate_pairs(sigs, num_hashes, bands, hash_fn=hash_fn)
     return jaccard_pairs(sh, cand, max_df=max_df).filter(
@@ -527,13 +526,14 @@ def simhash_duplicates(
     """Docs whose full SimHash collides (hamming distance 0) — grouped
     like exact_duplicates.  Banded hamming<k variants build on the same
     signature table."""
-    # sig feeds two consumers (group agg + join-back); without persist
-    # the whole shingle->aggregate subtree would execute twice
-    sig = simhash(docs, text_col, id_col, bits=bits, hash_fn=hash_fn).persist()
-    groups = sig.groupBy("simhash").agg(
-        F.min("doc_id").alias("canonical_id"), F.count(F.lit(1)).alias("group_size")
+    # one window over the signature groups: the signatures are read
+    # once, so nothing needs persisting
+    g = Window.partitionBy("simhash")
+    return simhash(docs, text_col, id_col, bits=bits, hash_fn=hash_fn).select(
+        "doc_id",
+        F.min("doc_id").over(g).alias("canonical_id"),
+        F.count(F.lit(1)).over(g).alias("group_size"),
     )
-    return sig.join(groups, "simhash").select("doc_id", "canonical_id", "group_size")
 
 
 def simhash_near_duplicates(
@@ -605,10 +605,8 @@ def winnow_candidate_pairs(
     fps = winnow_fingerprint_table(
         docs, text_col=text_col, id_col=id_col, k=k, window=window
     ).select(F.col(id_col).alias("_id"), "fp")
-    from pyspark.sql import Window as _W
-
     fps = (
-        fps.withColumn("_df", F.count(F.lit(1)).over(_W.partitionBy("fp")))
+        fps.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("fp")))
         .filter(F.col("_df") <= max_df)
         .drop("_df")
     )
@@ -719,7 +717,7 @@ def write_minhash_store(
             mode=mode, batch_id=batch_id, op="write_minhash_store",
         )
     finally:
-        sigs.unpersist()
+        release(sigs)
     if _fence is not None:
         verify_lease(*_fence)
 
@@ -831,6 +829,10 @@ def incremental_near_duplicates(
     from its parquet footers, so reading it runs no inference job.
     Nothing scans the corpus text.
 
+    With ``materialize`` (the default) the result is a local
+    checkpoint the caller owns; ``materialize=False`` returns the lazy
+    plan, which keeps reading the batch's signature checkpoint.
+
     ``update_store=True`` (requires ``batch_id``) writes the batch's
     signatures/bands after computing pairs, into the batch's own
     ``_batch=<id>`` partition with dynamic-partition overwrite — a
@@ -941,5 +943,5 @@ def incremental_near_duplicates(
             if materialize:
                 # a steady-state ingest loop would otherwise pin the
                 # batch's signatures for the session's lifetime
-                release_checkpoint(signed)
+                release(signed)
     return out

@@ -252,17 +252,17 @@ def banded_hamming_pairs(
     huge uniform tails set ``max_bucket`` to drop pathological
     buckets (same recall-vs-cost dial as the MinHash ``max_df``
     pruning — pairs whose EVERY shared block is oversubscribed are
-    missed)."""
+    missed).
+
+    ``sig`` feeds both halves of the self-join: a caller whose
+    signatures are costly to recompute passes them materialized, and
+    owns them."""
     if require_complete and max_hamming > n_bands - 1:
         raise ValueError(
             "pigeonhole completeness needs max_hamming <= n_bands - 1 "
             "(pass require_complete=False for the recall-heuristic "
             "regime)"
         )
-    # persist: the signature side feeds BOTH halves of the self-join;
-    # without it the decode+hash lineage can run once per side (the
-    # same reason dedup.simhash_near_duplicates persists)
-    sig = sig.persist()
     width = bits // n_bands
     mask = (1 << width) - 1
     banded = sig.select(

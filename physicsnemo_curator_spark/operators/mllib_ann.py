@@ -36,6 +36,7 @@ from physicsnemo_curator_spark.core.store import (
     memoized_parquet as _memoized_parquet,
     read_batch as _read_batch_partition,
     read_optional_parquet as _read_optional_parquet,
+    release as _release,
     try_local_path as _try_local_store_path,
     validate_batch_id as _core_validate_batch_id,
     write_batch_partitioned as _write_batch_partitioned,
@@ -1382,12 +1383,13 @@ def write_ivfpq_index(
         # re-evaluated per consumer could tombstone an id the write
         # never produced, killing its only live row, or skip one it
         # did, leaving a stale row served from an unprobed cell.
-        out = out.localCheckpoint()
+        out = snapshot = out.localCheckpoint()
         incoming_ids = out.select("vec_id").distinct()
         n_incoming = out.count()
     else:
-        incoming_ids = None
+        snapshot = incoming_ids = None
         n_incoming = 0
+    carried = None
     prev_batch = _read_batch_partition(
         corpus.sparkSession, data_dir, batch_id
     ) if mode == "append" and gen > 0 else None
@@ -1404,7 +1406,7 @@ def write_ivfpq_index(
         # reads back as 7, so a string filter silently matches
         # nothing), and a fresh batch name skips this entirely via
         # the directory existence check.
-        surviving = _carry_surviving(
+        carried = _carry_surviving(
             prev_batch.select(
                 "vec_id",
                 F.col("cell").cast("int").alias("cell"),
@@ -1413,8 +1415,8 @@ def write_ivfpq_index(
             ),
             incoming_ids,
             "vec_id",
-        ).withColumn("_batch", F.lit(batch_id))
-        out = out.unionByName(surviving)
+        )
+        out = out.unionByName(carried.withColumn("_batch", F.lit(batch_id)))
     # a static overwrite deletes the WHOLE output path; on a flat
     # (never-compacted) store that path IS the store root, including
     # the _quantizers.json sidecar save_quantizers may have written
@@ -1532,6 +1534,8 @@ def write_ivfpq_index(
                 .limit(1)
                 .count()
             )
+        # the snapshot's last reader has run
+        _release(snapshot, carried)
         if mine_new != n_incoming or foreign_same_batch:
             raise RuntimeError(
                 f"concurrent append detected: batch {batch_id!r} in "
@@ -2793,7 +2797,8 @@ def incremental_semantic_dedup(
     BROADCAST into the corpus join (a batch is small; the corpus is
     not), and the corpus scan prunes to the batch's cell partitions.
     ``update_store=True`` appends the batch under its own partition
-    afterwards (same idempotency as the MinHash store).
+    afterwards (same idempotency as the MinHash store) and returns the
+    pairs as a local checkpoint the caller owns.
     ``lease=True`` holds the store's maintenance lease for the whole
     probe+write pass (the shared read-to-write double-ingest
     reasoning)."""

@@ -38,6 +38,7 @@ from physicsnemo_curator_spark.core.store import (
     maintenance_root,
     memoized_parquet,
     read_batch,
+    release,
     validate_batch_id,
     verify_lease,
     write_batch_partitioned,
@@ -337,6 +338,7 @@ def write_split_store(
         ),
     ]
     out = assignments.select(*cols)
+    snapshot = surviving = None
     with job_label(assignments.sparkSession, "sampling.write_split_store/write"):
         prev = (
             read_batch(assignments.sparkSession, store, batch_id)
@@ -348,20 +350,23 @@ def write_split_store(
             # the write below see the same id set even for a
             # non-deterministic input plan, then carry the batch's
             # surviving stored rows through the partition rewrite
-            out = out.localCheckpoint()
+            out = snapshot = out.localCheckpoint()
             surviving = carry_surviving(
                 prev.select("doc_id", "split", "component", "reason"),
                 out.select("doc_id"),
                 "doc_id",
             )
             out = out.unionByName(surviving)
-        if _fence is not None:
-            # fencing before the commit: a holder whose TTL lapsed (and
-            # was stolen from) must not write a row
-            verify_lease(*_fence)
-        write_batch_partitioned(
-            out.withColumn("_batch", F.lit(batch_id)), store, mode=mode
-        )
+        try:
+            if _fence is not None:
+                # fencing before the commit: a holder whose TTL lapsed
+                # (and was stolen from) must not write a row
+                verify_lease(*_fence)
+            write_batch_partitioned(
+                out.withColumn("_batch", F.lit(batch_id)), store, mode=mode
+            )
+        finally:
+            release(snapshot, surviving)
     if _fence is not None:
         verify_lease(*_fence)
 
@@ -424,10 +429,12 @@ def assign_splits_incremental(
     (batch-bounded in the common case and auto-broadcast; a
     mega-component is legitimately large, so nothing forces a
     broadcast).  The new ids and the pruned group map are each
-    computed once (persisted for the store probe and the decision,
-    released before returning); the guards are single aggregates
-    (``max != min``, not a second ``count_distinct`` shuffle).  The
-    per-split decision is a projection.  ``update_store=True``
+    computed once (persisted for the store probe and the decision);
+    the guards are single aggregates (``max != min``, not a second
+    ``count_distinct`` shuffle).  The per-split decision is a
+    projection, materialized as a local checkpoint the caller owns;
+    every other frame the pass materializes is released before
+    returning.  ``update_store=True``
     (requires ``batch_id``) upserts the non-stored rows under
     ``_batch=<id>`` (idempotent re-runs; a partial re-run carries the
     batch's earlier rows — see :func:`write_split_store`).
@@ -500,6 +507,7 @@ def assign_splits_incremental(
         .distinct()
     )
     g_rel = g.join(new_comps, "component", "left_semi").persist()
+    relevant = None
     try:
         with job_label(spark, "sampling.assign_splits_incremental/probe"):
             stored = memoized_parquet(spark, store).select("doc_id", "split")
@@ -558,12 +566,13 @@ def assign_splits_incremental(
             split.alias(split_col),
             reason.alias("reason"),
         )
+        # materialized, so the frames above can be released, and BEFORE
+        # an update_store write mutates the store the plan reads
+        with job_label(spark, "sampling.assign_splits_incremental/decide"):
+            out = out.localCheckpoint()
         if update_store:
-            # materialize BEFORE mutating the store the plan reads, and
             # write only the genuinely-new rows — stored docs are never
             # rewritten, so the store stays unique per doc_id
-            with job_label(spark, "sampling.assign_splits_incremental/decide"):
-                out = out.localCheckpoint()
             write_split_store(
                 out.filter(F.col("reason") != "stored").withColumnRenamed(
                     split_col, "split"
@@ -574,10 +583,7 @@ def assign_splits_incremental(
                 _fence=_fence,
             )
     finally:
-        # without update_store the returned plan is lazy and recomputes
-        # both frames from their lineage when the caller runs it
-        new_ids.unpersist()
-        g_rel.unpersist()
+        release(new_ids, g_rel, relevant)
     return out
 
 

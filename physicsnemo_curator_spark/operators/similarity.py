@@ -22,6 +22,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.jobs import job_label
+from physicsnemo_curator_spark.core.store import release
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a_i·b_i via zip_with + aggregate (JVM higher-order fns).
@@ -384,6 +387,9 @@ def pairwise_near_duplicates(
     recall amplification compensates for the sharper per-band filter.
     The extra count() job is one metadata-cheap pass; callers that know
     their corpus can pin both knobs explicitly.
+
+    The banded path returns a local checkpoint the caller owns; the
+    exact path a lazy plan.
     """
     import math as _math
 
@@ -419,11 +425,10 @@ def pairwise_near_duplicates(
             .dropDuplicates(["a", "b"])
         )
         # materialize the (bounded, id-pair) candidate set so the
-        # banded cache can release NOW — returning it lazily pinned
-        # eb's cached blocks for the session lifetime (one leak per
-        # call on the bench loop)
-        cand = cand.localCheckpoint(eager=True)
-        eb.unpersist()
+        # banded cache can release NOW
+        with job_label(e.sparkSession, "similarity.pairwise_near_duplicates/candidates"):
+            cand = cand.localCheckpoint(eager=True)
+        release(eb)
         pairs = (
             cand.join(e.select(F.col("vec_id").alias("a"),
                                F.col("vec").alias("_va"),
@@ -451,8 +456,15 @@ def pairwise_near_duplicates(
         cosine_prenormed(
             "_va", "_vb", F.col("_na"), F.col("_nb"), dim
         ).alias("cosine"),
-    )
-    return scored.filter(F.col("cosine") >= F.lit(threshold))
+    ).filter(F.col("cosine") >= F.lit(threshold))
+    if exact:
+        return scored
+    # the candidates' checkpoint is released once the pairs that read
+    # it are materialized
+    with job_label(e.sparkSession, "similarity.pairwise_near_duplicates/verify"):
+        scored = scored.localCheckpoint(eager=True)
+    release(cand)
+    return scored
 
 
 # ---------------------------------------------------------------------------

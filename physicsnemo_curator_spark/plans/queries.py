@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from physicsnemo_curator_spark.core.store import path_ident
+from physicsnemo_curator_spark.core.store import path_ident, release
 from physicsnemo_curator_spark.functions import math as M
 from physicsnemo_curator_spark.operators import (
     components,
@@ -2160,6 +2160,7 @@ def _split_gate_store(spark: SparkSession, sf_dir: str, hash_fn: str) -> str:
         update_store=True,
         batch_id="b1",
     )
+    release(pairs)
     with open(marker, "w") as fh:
         fh.write("ok")
     return store
@@ -8640,8 +8641,8 @@ def q_media_imagehash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dmedia = media.filter(F.col("_side") == "d").drop("_side")
     amedia = media.filter(F.col("_side") == "a").drop("_side")
-    # hash ONCE: both the banded join and the bit-string projection
-    # read the same persisted signature table
+    # both the banded join and the bit-string projection read the
+    # hashes; an 8x9 dhash recomputes faster than a checkpoint job
     dh_all = ih.with_image_hashes(dmedia, method="dhash")
     pairs = ih.banded_hamming_pairs(dh_all, max_hamming=3, n_bands=4)
     dh = dh_all.filter(F.col("media_id") % 2 == 0)
@@ -8777,8 +8778,9 @@ def q_media_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded_hamming_pairs as _bhp,
     )
 
-    # fingerprint ONCE for both the join and the projection
-    fps_all = _ah.with_audio_fingerprints(media)
+    # fingerprint ONCE for both the join and the projection (the
+    # returned plan reads the checkpoint: caller owns)
+    fps_all = _ah.with_audio_fingerprints(media).localCheckpoint()
     pairs = _bhp(fps_all, max_hamming=3, n_bands=4)
     fps = fps_all.filter(F.col("media_id") % 2 == 0)
     return (
@@ -8908,8 +8910,9 @@ def q_media_videohash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "height int, n_bytes long",
     )
     # fingerprint ONCE (frame explode + per-frame hashing + 64-way
-    # vote) for both the banded join and the projection
-    fps_all = ih.with_video_fingerprints(media)
+    # vote) for both the banded join and the projection (the returned
+    # plan reads the checkpoint: caller owns)
+    fps_all = ih.with_video_fingerprints(media).localCheckpoint()
     pairs = ih.banded_hamming_pairs(fps_all, max_hamming=3, n_bands=4)
     fps = fps_all.filter(F.col("media_id") % 2 == 0)
     return (

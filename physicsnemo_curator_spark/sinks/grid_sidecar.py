@@ -48,7 +48,8 @@ def write_grid_sidecar(
 
     ``meta`` may carry an optional ``relpath`` column (the source-mirror
     path, reference ``{relpath}/{stem}`` naming); absent → flat layout.
-    Returns ``(grid_id, path)`` of the written sidecars.  Each task owns
+    Returns ``(grid_id, path)`` of the written sidecars, a local
+    checkpoint the caller owns.  Each task owns
     exactly one grid and commits via tmp-dir + ``os.replace`` — the
     reference's atomicity discipline (``grid_sidecar.py:186-196``),
     which also makes re-runs idempotent (last writer wins whole dirs).

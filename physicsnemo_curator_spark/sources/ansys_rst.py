@@ -28,6 +28,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+from physicsnemo_curator_spark.core.jobs import job_label
+from physicsnemo_curator_spark.core.store import release
+
 try:  # pragma: no cover — not installed in this environment
     from ansys.dpf import core as _dpf  # type: ignore  # noqa: F401
 
@@ -172,11 +175,12 @@ def read_ansys_rst(
     tables (points/cells/point_data/cell_data — the ``read_vtk``
     schemas).
 
-    Each file's ``dpf.Model`` is opened ONCE per action: a single
-    ``mapInPandas`` kernel extracts everything into one section-tagged
-    long frame (persisted, since a DPF open is a licensed-server
-    round-trip — far heavier than the VTK parsers' re-scan), and the
-    four mesh tables are filter/select views over it.
+    Each file's ``dpf.Model`` is opened ONCE: a single ``mapInPandas``
+    kernel extracts everything into one section-tagged long frame
+    (persisted, since a DPF open is a licensed-server round-trip — far
+    heavier than the VTK parsers' re-scan), the four mesh tables are
+    materialized from it as local checkpoints the caller owns, and the
+    persisted frame is released.
 
     Requires ``ansys-dpf-core`` (and a licensed Ansys install) on the
     executors; without it this raises immediately with the reason —
@@ -248,7 +252,7 @@ def read_ansys_rst(
             "mesh_id", F.col("idx").alias(id_name), "field", "value"
         )
 
-    return {
+    views = {
         "points": unified.filter(F.col("section") == "points").select(
             "mesh_id", F.col("idx").alias("point_id"), "x", "y", "z"
         ),
@@ -258,3 +262,7 @@ def read_ansys_rst(
         "point_data": _data_view("point_data", "point_id"),
         "cell_data": _data_view("cell_data", "cell_id"),
     }
+    with job_label(spark, "ansys_rst.read_ansys_rst/extract"):
+        tables = {k: v.localCheckpoint() for k, v in views.items()}
+    release(unified)
+    return tables

@@ -71,7 +71,6 @@ def read_openradioss(
     *,
     vtk_glob: str = "*.vtk",
     prune_unreferenced: bool = True,
-    persist_parsed: bool | None = None,
 ) -> dict[str, DataFrame]:
     """Scan OpenRadioss run directories → assembled per-run tables.
 
@@ -86,27 +85,6 @@ def read_openradioss(
     Point-count mismatches across a run's timesteps raise (reference
     ``openradioss.py:371-374``) — a silent inner-join drop would
     corrupt every downstream displacement.
-
-    ``persist_parsed`` is the parse-dedup switch (default ``None`` =
-    auto: persist when total input bytes exceed
-    ``$SPARK_GRAFT_PARSE_PERSIST_BYTES``, default 0 — i.e. always):
-
-    - **True (default)**: persist the PARSED points/cells tables
-      instead of the raw bytes — one parse pass each for points and
-      cells, however many returned tables the caller materializes.  At
-      100 TB the raw-byte cache cannot stay memory-resident, so every
-      points-consuming branch would otherwise become a full input
-      re-read + re-parse.  Measured faster at every size tried
-      (interleaved A/Bs, this host: gate KB fixture 4.6→4.1 s,
-      1.5 MB 6.5→5.0 s, 15 MB 14.9→11.4 s, points+cells+
-      displacements+trajectory consumed through the noop sink).
-    - **False** (set the env threshold above the input size): cache
-      the raw bytes once and let every returned table re-parse them
-      in its own MapInPandas branch — parallel duplicate parse stages,
-      the r15 shape.  Kept as the opt-out because cache-fill
-      serialization CAN beat parallel re-parse on degenerate
-      tiny-file/many-core layouts (the r15 f441369 experiment — a
-      broader persist set — measured that direction).
     """
     runs = discover_runs(input_dir, vtk_glob)
     keymap_rows = [
@@ -115,21 +93,7 @@ def read_openradioss(
         for t, p in enumerate(files)
     ]
     all_paths = [p for files in runs.values() for p in files]
-    if persist_parsed is None:
-        try:
-            total_bytes = sum(os.path.getsize(p) for p in all_paths)
-        except OSError:
-            total_bytes = None  # non-local paths: size unknown
-        threshold = int(
-            os.environ.get("SPARK_GRAFT_PARSE_PERSIST_BYTES", "0")
-        )
-        persist_parsed = total_bytes is None or total_bytes > threshold
-    # cache=True (raw-byte regime): the consistency count below plus
-    # every returned table re-materializes the scan — without the
-    # persist each one would re-parse every timestep file from scratch
-    t = read_vtk(
-        spark, all_paths, mesh_id_from="path", cache=not persist_parsed
-    )
+    t = read_vtk(spark, all_paths, mesh_id_from="path")
     keymap = F.broadcast(
         spark.createDataFrame(
             keymap_rows, "mesh_key string, run_id string, t int"
@@ -144,11 +108,6 @@ def read_openradioss(
         )
 
     pts = _rekey(t["points"])
-    if persist_parsed:
-        # large regime: one points parse total — the consistency-check
-        # collect right below fills this cache, and the t=0 base, the
-        # displacement window, and the trajectory stack all reuse it
-        pts = pts.persist()
 
     # consistency check: every timestep of a run must carry the same
     # point count (one tiny aggregate: |runs| x |timesteps| rows)
@@ -185,10 +144,6 @@ def read_openradioss(
         F.col("z").alias("z0"),
     )
     cells0 = _rekey(t["cells"]).filter(F.col("t") == 0).drop("t")
-    if persist_parsed:
-        # large regime: one cells parse total — the referenced-point
-        # scan (remap) and the connectivity rewrite both reuse it
-        cells0 = cells0.persist()
 
     if prune_unreferenced:
         referenced = (

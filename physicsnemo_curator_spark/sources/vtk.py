@@ -30,6 +30,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.jobs import job_label
+from physicsnemo_curator_spark.core.store import release
+
 POINTS_SCHEMA = "mesh_id string, point_id long, x double, y double, z double"
 CELLS_SCHEMA = "mesh_id string, cell_id long, vs array<long>, ctype int"
 POINT_DATA_SCHEMA = "mesh_id string, point_id long, field string, value double"
@@ -203,7 +206,6 @@ def read_vtk(
     exclude_fields: list[str] | None = None,
     path_rules: dict[str, dict[str, list[str]]] | None = None,
     mesh_id_from: str = "stem",
-    cache: bool = False,
 ) -> dict[str, DataFrame]:
     """Read a directory of VTK files (legacy ``.vtk``, XML ``.vtu`` /
     ``.vtp`` — pass ``glob='*.vtu'`` etc.) into mesh tables
@@ -224,9 +226,7 @@ def read_vtk(
     layout nests same-named files (e.g. per-block ``piece.vtu`` dirs).
 
     Each returned table re-scans and re-parses the files when
-    materialized; ``cache=True`` persists the raw bytes once for
-    consumers that materialize several tables (memory ~ input bytes;
-    the cache lives until the session releases it).
+    materialized.
     """
     if mesh_id_from not in ("stem", "path"):
         raise ValueError("mesh_id_from must be 'stem' or 'path'")
@@ -242,8 +242,6 @@ def read_vtk(
         # (read_vtm) is taken as-is
         reader = reader.option("pathGlobFilter", glob)
     raw = reader.load(path).select("path", "content")
-    if cache:
-        raw = raw.persist()
 
     def keep_for(file_path: str):
         """Resolve the effective rule for one file: longest glob wins."""
@@ -431,8 +429,9 @@ def read_image_data(
     decode per file serves both); ``meta`` uses a header-only parse
     that never touches the array payloads.  A consumer materializing
     both lattice tables independently still re-runs the shared parse
-    once per action — pass ``cache=True`` to persist the parsed long
-    table across them (memory ~ decoded field volume)."""
+    once per action — pass ``cache=True`` to parse once here: both
+    lattice tables come back as local checkpoints the caller owns
+    (memory ~ decoded field volume)."""
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
@@ -541,8 +540,6 @@ def read_image_data(
         "grid_id string, lattice string, iz int, iy int, ix int, "
         "field string, value double",
     )
-    if cache:
-        unified = unified.persist()
 
     def parse_meta(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -568,11 +565,19 @@ def read_image_data(
                 ],
             )
 
+    grid = unified.filter(F.col("lattice") == "point").drop("lattice")
+    cell_grid = unified.filter(F.col("lattice") == "cell").drop("lattice")
+    if cache:
+        # the first checkpoint fills the parse's cache, the second
+        # reads it; nothing reads the parse after that
+        unified.persist()
+        with job_label(spark, "vtk.read_image_data/parse"):
+            grid = grid.localCheckpoint()
+            cell_grid = cell_grid.localCheckpoint()
+        release(unified)
     return {
-        "grid": unified.filter(F.col("lattice") == "point").drop("lattice"),
-        "cell_grid": unified.filter(F.col("lattice") == "cell").drop(
-            "lattice"
-        ),
+        "grid": grid,
+        "cell_grid": cell_grid,
         "meta": raw.mapInPandas(parse_meta, IMAGE_META_SCHEMA),
     }
 

@@ -8,6 +8,10 @@ from pyspark.sql import functions as F
 from physicsnemo_curator_spark.operators import dedup
 
 
+def persisted_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
 def _mk_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -144,7 +148,9 @@ def test_steady_state_ingest_op_job_budget(spark, tmp_path):
     curated write) against stores a first batch seeded stays within
     its Spark job budget.  Each operator computes every intermediate
     once: a hidden action, a shared frame recomputed per consumer or an
-    aggregate whose output is dropped shows up here as extra jobs."""
+    aggregate whose output is dropped shows up here as extra jobs.  The
+    op leaves persisted RDDs only for the frames the operators hand
+    back: the probe pairs, the component labels and the assignments."""
     from physicsnemo_curator_spark.operators import components, sampling, sketches
 
     mh, splits, hll, out = (str(tmp_path / d) for d in ("mh", "split", "hll", "out"))
@@ -169,6 +175,7 @@ def test_steady_state_ingest_op_job_budget(spark, tmp_path):
 
     st = spark.sparkContext.statusTracker()
     before = set(st.getJobIdsForGroup(None))
+    rdds_before = persisted_ids(spark)
     batch = spark.read.parquet(path)
     pairs = dedup.incremental_near_duplicates(spark, batch, mh, threshold=0.8)
     losers = pairs.select(F.col("b").alias("doc_id")).distinct()
@@ -183,7 +190,9 @@ def test_steady_state_ingest_op_job_budget(spark, tmp_path):
         "append"
     ).partitionBy("split").parquet(out)
     jobs = len(set(st.getJobIdsForGroup(None)) - before)
+    left = persisted_ids(spark) - rdds_before
 
     # the copies of seed docs and the in-batch near-dup are dropped
     assert {r.doc_id for r in losers.collect()} == {100, 104, 108, 112, 116, 130}
     assert jobs <= 54, f"{jobs} Spark jobs for one ingest op"
+    assert len(left) <= 3, f"one ingest op left {len(left)} persisted RDDs"

@@ -97,37 +97,3 @@ def test_duplicate_run_leaf_names_raise(tmp_path):
     _write_run(tmp_path / "caseB" / "run1")
     with pytest.raises(ValueError, match="share the leaf name"):
         discover_runs(str(tmp_path), "*.vtu")
-
-
-def test_persist_parsed_regime_equals_default(spark, tmp_path):
-    """The size-gated parse-persist switch (persist_parsed=True — the
-    100 TB regime that caches parsed points/cells instead of raw
-    bytes) must return byte-identical tables to the small-input
-    default, and the auto threshold must pick the small regime for a
-    KB-sized input."""
-    import os
-
-    _write_run(tmp_path / "runA", n_steps=3, n_pts=5, dangling=True)
-    _write_run(tmp_path / "runB", n_steps=3, n_pts=4, dangling=True)
-
-    small = read_openradioss(
-        spark, str(tmp_path), vtk_glob="*.vtu", persist_parsed=False
-    )
-    big = read_openradioss(
-        spark, str(tmp_path), vtk_glob="*.vtu", persist_parsed=True
-    )
-    for name in (
-        "points", "cells", "displacements", "trajectory", "globals"
-    ):
-        a = sorted(map(repr, small[name].collect()))
-        b = sorted(map(repr, big[name].collect()))
-        assert a == b, f"{name} differs between parse-persist regimes"
-
-    # auto mode (default threshold 0 -> parsed-persist regime) must
-    # read the same rows as both explicit regimes
-    assert os.environ.get("SPARK_GRAFT_PARSE_PERSIST_BYTES") is None
-    auto = read_openradioss(spark, str(tmp_path), vtk_glob="*.vtu")
-    assert sorted(map(repr, auto["points"].collect())) == sorted(
-        map(repr, small["points"].collect())
-    )
-    spark.catalog.clearCache()

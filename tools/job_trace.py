@@ -1,8 +1,11 @@
 #!/usr/bin/env python
 """Per-job trace for a declared query: run it warm and print every
 Spark job the warm rep submits (job id, # stages, first stage name =
-call site, and the operator step's job label when it set one).  Job counts are deterministic, so this works on a
-contended box where wall-clock A/Bs do not.
+call site, and the operator step's job label when it set one), and
+the session's persisted-RDD count before and after that rep, so a frame
+an operator persists and never releases shows up as a rise.  Job counts
+are deterministic, so this works on a contended box where wall-clock
+A/Bs do not.
 
 Usage: python tools/job_trace.py q_name [q_name ...]
 """
@@ -30,9 +33,14 @@ def main() -> None:
         fn(spark, sf_dir).collect()  # cold rep (fills fixture/session caches)
         st = sc.statusTracker()
         before = set(st.getJobIdsForGroup(None))
+        rdds_before = sc._jsc.getPersistentRDDs().size()
         fn(spark, sf_dir).collect()  # warm rep — the one we trace
+        rdds_after = sc._jsc.getPersistentRDDs().size()
         after = [j for j in st.getJobIdsForGroup(None) if j not in before]
-        print(f"== {name}: {len(after)} warm jobs ==")
+        print(
+            f"== {name}: {len(after)} warm jobs, persisted RDDs "
+            f"{rdds_before} -> {rdds_after} =="
+        )
         for jid in sorted(after):
             ji = jsc.statusTracker().getJobInfo(jid)
             if ji.isEmpty():
