@@ -271,22 +271,34 @@ def footer_schema(local: str):
 
 
 def release(*frames) -> None:
-    """Free materialized frames now rather than when the JVM
-    garbage-collects them: a ``persist()``ed frame leaves the
-    CacheManager, a ``localCheckpoint()`` frame drops its RDD's blocks,
-    and ``None`` is skipped.  The one release call of the package: the
-    function that materializes a frame releases it once its last
-    reader has run, unless it hands the frame to its caller, who then
-    owns it.  Release a checkpoint only when no plan will run it
-    again: its lineage is gone, so a later read fails."""
+    """Free materialized frames now, not when the JVM garbage-collects
+    them: a ``persist()``ed frame leaves the CacheManager, a
+    ``localCheckpoint()`` frame drops its RDD's blocks, ``None`` is
+    skipped.  The package's one release call, under one rule:
+
+    - a frame read only inside a call is released before it returns;
+    - a frame the returned lazy plan reads is not persisted, or the
+      output is materialized and the frame released;
+    - a frame handed back is the caller's ("caller owns" in its docs);
+    - frames a declared query shares across calls (the dedup family's,
+      the media hashes) stay with the CacheManager, which reuses them.
+
+    Persist or checkpoint: under AQE each reference to a persisted
+    frame not yet cached runs a cache-stage job of its own; a toy frame
+    read three times in one query took 7 jobs persisted, 5 checkpointed,
+    6 recomputed.  Release a checkpoint only when no plan reads it again."""
+    from pyspark import StorageLevel
+
     for df in frames:
         if df is None:
+            continue
+        if df.storageLevel != StorageLevel.NONE:
+            # a persist() over any plan, a local checkpoint's included
+            df.unpersist(blocking=False)
             continue
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
-        else:
-            df.unpersist(blocking=False)
 
 
 def read_batch(spark, store: str, batch_id: str):

@@ -552,17 +552,19 @@ def simhash_near_duplicates(
     ``n_bands`` blocks; any pair within hamming ≤ n_bands-1 must agree
     on at least one whole block, so candidates come from block-equality
     equi-joins (shuffle keyed on (band, block)), then exact hamming
-    verifies.  Never enumerates all pairs.
+    verifies.  Never enumerates all pairs.  Returns a local checkpoint
+    the caller owns: the signatures both join sides read are persisted
+    and released once the pairs are materialized.
     """
     from physicsnemo_curator_spark.operators.imagehash import (
         banded_hamming_pairs,
     )
 
-    sig = simhash(docs, text_col, id_col, bits=bits, hash_fn=hash_fn)
+    sig = simhash(docs, text_col, id_col, bits=bits, hash_fn=hash_fn).persist()
     # shared banding/verify plan (imagehash.banded_hamming_pairs):
     # block-equality equi-join then bit_count — one implementation
     # for the text, image and audio hamming families
-    return banded_hamming_pairs(
+    pairs = banded_hamming_pairs(
         sig,
         hash_col="simhash",
         id_col="doc_id",
@@ -573,6 +575,10 @@ def simhash_near_duplicates(
         # as a recall heuristic (precision-pinned in tests)
         require_complete=False,
     )
+    with job_label(docs.sparkSession, "dedup.simhash_near_duplicates/pairs"):
+        pairs = pairs.localCheckpoint()
+    release(sig)
+    return pairs
 
 
 def winnow_candidate_pairs(

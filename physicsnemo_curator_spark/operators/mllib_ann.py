@@ -1390,163 +1390,165 @@ def write_ivfpq_index(
         snapshot = incoming_ids = None
         n_incoming = 0
     carried = None
-    prev_batch = _read_batch_partition(
-        corpus.sparkSession, data_dir, batch_id
-    ) if mode == "append" and gen > 0 else None
-    if prev_batch is not None:
-        # PARTIAL re-run of an existing batch name: dynamic overwrite
-        # replaces every (_batch, cell) partition the incoming rows
-        # touch, which would DELETE same-batch rows of vectors the
-        # re-run didn't carry (found by the randomized lifecycle
-        # test) — so an append is a true per-vector UPSERT: carry the
-        # batch's surviving rows (original _gen, codes untouched)
-        # through the rewrite.  The batch partition is read by its
-        # DIRECTORY (no _batch value comparison: Spark's partition
-        # type inference canonicalizes numeric-looking names, '007'
-        # reads back as 7, so a string filter silently matches
-        # nothing), and a fresh batch name skips this entirely via
-        # the directory existence check.
-        carried = _carry_surviving(
-            prev_batch.select(
-                "vec_id",
-                F.col("cell").cast("int").alias("cell"),
-                "codes",
-                F.col("_gen").cast("long").alias("_gen"),
-            ),
-            incoming_ids,
-            "vec_id",
-        )
-        out = out.unionByName(carried.withColumn("_batch", F.lit(batch_id)))
-    # a static overwrite deletes the WHOLE output path; on a flat
-    # (never-compacted) store that path IS the store root, including
-    # the _quantizers.json sidecar save_quantizers may have written
-    # and any live _LEASE record (a leased flat-store rebuild would
-    # otherwise wipe its own lease mid-pass and fail its fencing
-    # verify after the write had already committed — review-found) —
-    # stash them to disk FIRST and restore in a finally, so a Spark
-    # write that dies mid-job can't destroy the only copy of the
-    # quantizers the codes are unreadable without.  (Once compacted,
-    # data lives under <store>/vNNNNN and the root files are never
-    # in the overwrite's blast radius.)
-    stashes: list[tuple[str, str]] = []
-    if mode == "overwrite" and root is not None and data_dir == root:
-        import shutil
-        import tempfile
-
-        for name in ("_quantizers.json", _LEASE_FILE):
-            p = os.path.join(root, name)
-            if os.path.exists(p):
-                fd, tmp = tempfile.mkstemp(prefix="pcs_stash_")
-                os.close(fd)
-                shutil.copy2(p, tmp)
-                stashes.append((p, tmp))
-    if _fence is not None:
-        # fencing BEFORE the data commit: a holder whose TTL lapsed
-        # (and was stolen from) must not write a row — the thief may
-        # already be mid-pass
-        _verify_lease(*_fence)
     try:
-        _write_batch_partitioned(
-            out, data_dir, mode=mode,
-            partition_cols=("_batch", "cell"),
-            repartition_cols=("_batch", "cell"),
-        )
-    finally:
-        if stashes:
-            import shutil
-
-            for p, tmp in stashes:
-                if not os.path.exists(p):
-                    shutil.copy2(tmp, p)
-                os.unlink(tmp)
-    if root is not None and (mode == "overwrite" or not stamped):
-        # stamp the encode config the codes were ACTUALLY written with
-        # (after the data commit: a crashed overwrite must not leave a
-        # fresh stamp over the old generation's codes).  An overwrite
-        # redefines it; an append to an unstamped legacy store records
-        # the caller's word so every LATER write and probe is guarded.
-        _write_index_meta(root, {"perm": perm, "rot": rot})
-    # tombstones live inside the data generation dir, so an overwrite
-    # (whose static mode just deleted data_dir wholesale) resets them
-    # for free — a stale dead_below from the previous life would kill
-    # the fresh _gen=0 rows otherwise
-    tomb_dir = os.path.join(data_dir, "_tombstones")
-    if _fence is not None and mode == "append" and gen > 0:
-        # fencing again before the tombstone commit (the append's
-        # second write): the data landed, but a tombstone written
-        # after a steal could kill rows of the thief's pass
-        _verify_lease(*_fence)
-    if mode == "append" and gen > 0:
-        conflicts = (
-            _read_store_data(corpus.sparkSession, data_dir)
-            .filter(F.col("_gen").cast("long") < gen)
-            .select("vec_id")
-            .join(incoming_ids, "vec_id", "left_semi")
-            .distinct()
-            .withColumn("dead_below", F.lit(gen).cast("long"))
-        )
-        conflicts.write.mode("append").parquet(tomb_dir)
-    if mode == "append":
-        # append-vs-append detection: two concurrent appends both read
-        # max+1 and stamp the SAME _gen, so neither tombstones the
-        # other and a doubly-written vec_id would serve
-        # nondeterministically (row_number ties on equal _gen).  Our
-        # own new-gen rows live exactly in our batch partition
-        # (path-addressed — no partition-type inference); any OTHER
-        # row at this _gen is a foreign writer.
-        spark = corpus.sparkSession
-        total_new = (
-            _read_store_data(spark, data_dir)
-            .filter(F.col("_gen").cast("long") == gen)
-            .count()
-        )
-        mine = _read_batch_partition(spark, data_dir, batch_id)
-        mine_new = (
-            mine.filter(F.col("_gen").cast("long") == gen).count()
-            if mine is not None
-            else 0
-        )
-        if total_new != mine_new:
-            raise RuntimeError(
-                f"concurrent append detected: {total_new - mine_new} "
-                f"row(s) outside batch {batch_id!r} carry this "
-                f"write's generation {gen} in {data_dir!r} — another "
-                "writer appended concurrently and conflict "
-                "resolution between the two batches is undefined "
-                "(equal _gen). Compact the store, then re-run ONE of "
-                "the two appends."
+        prev_batch = _read_batch_partition(
+            corpus.sparkSession, data_dir, batch_id
+        ) if mode == "append" and gen > 0 else None
+        if prev_batch is not None:
+            # PARTIAL re-run of an existing batch name: dynamic overwrite
+            # replaces every (_batch, cell) partition the incoming rows
+            # touch, which would DELETE same-batch rows of vectors the
+            # re-run didn't carry (found by the randomized lifecycle
+            # test) — so an append is a true per-vector UPSERT: carry the
+            # batch's surviving rows (original _gen, codes untouched)
+            # through the rewrite.  The batch partition is read by its
+            # DIRECTORY (no _batch value comparison: Spark's partition
+            # type inference canonicalizes numeric-looking names, '007'
+            # reads back as 7, so a string filter silently matches
+            # nothing), and a fresh batch name skips this entirely via
+            # the directory existence check.
+            carried = _carry_surviving(
+                prev_batch.select(
+                    "vec_id",
+                    F.col("cell").cast("int").alias("cell"),
+                    "codes",
+                    F.col("_gen").cast("long").alias("_gen"),
+                ),
+                incoming_ids,
+                "vec_id",
             )
-        # a concurrent append that reused the SAME batch_id lands its
-        # rows in OUR partition and counts as "mine" above — so also
-        # reconcile the partition's new-gen rows against the
-        # checkpointed incoming snapshot: a row count or id-set
-        # divergence means a foreign writer's files interleaved with
-        # (or replaced) ours under dynamic partition overwrite.  Two
-        # same-batch writers committing the EXACT same id set remain
-        # indistinguishable (and conflict only if their code values
-        # differ — a pipeline bug, not a race this check can see).
-        foreign_same_batch = 0
-        if mine is not None and mine_new == n_incoming:
-            foreign_same_batch = (
-                mine.filter(F.col("_gen").cast("long") == gen)
+            out = out.unionByName(carried.withColumn("_batch", F.lit(batch_id)))
+        # a static overwrite deletes the WHOLE output path; on a flat
+        # (never-compacted) store that path IS the store root, including
+        # the _quantizers.json sidecar save_quantizers may have written
+        # and any live _LEASE record (a leased flat-store rebuild would
+        # otherwise wipe its own lease mid-pass and fail its fencing
+        # verify after the write had already committed — review-found) —
+        # stash them to disk FIRST and restore in a finally, so a Spark
+        # write that dies mid-job can't destroy the only copy of the
+        # quantizers the codes are unreadable without.  (Once compacted,
+        # data lives under <store>/vNNNNN and the root files are never
+        # in the overwrite's blast radius.)
+        stashes: list[tuple[str, str]] = []
+        if mode == "overwrite" and root is not None and data_dir == root:
+            import shutil
+            import tempfile
+
+            for name in ("_quantizers.json", _LEASE_FILE):
+                p = os.path.join(root, name)
+                if os.path.exists(p):
+                    fd, tmp = tempfile.mkstemp(prefix="pcs_stash_")
+                    os.close(fd)
+                    shutil.copy2(p, tmp)
+                    stashes.append((p, tmp))
+        if _fence is not None:
+            # fencing BEFORE the data commit: a holder whose TTL lapsed
+            # (and was stolen from) must not write a row — the thief may
+            # already be mid-pass
+            _verify_lease(*_fence)
+        try:
+            _write_batch_partitioned(
+                out, data_dir, mode=mode,
+                partition_cols=("_batch", "cell"),
+                repartition_cols=("_batch", "cell"),
+            )
+        finally:
+            if stashes:
+                import shutil
+
+                for p, tmp in stashes:
+                    if not os.path.exists(p):
+                        shutil.copy2(tmp, p)
+                    os.unlink(tmp)
+        if root is not None and (mode == "overwrite" or not stamped):
+            # stamp the encode config the codes were ACTUALLY written with
+            # (after the data commit: a crashed overwrite must not leave a
+            # fresh stamp over the old generation's codes).  An overwrite
+            # redefines it; an append to an unstamped legacy store records
+            # the caller's word so every LATER write and probe is guarded.
+            _write_index_meta(root, {"perm": perm, "rot": rot})
+        # tombstones live inside the data generation dir, so an overwrite
+        # (whose static mode just deleted data_dir wholesale) resets them
+        # for free — a stale dead_below from the previous life would kill
+        # the fresh _gen=0 rows otherwise
+        tomb_dir = os.path.join(data_dir, "_tombstones")
+        if _fence is not None and mode == "append" and gen > 0:
+            # fencing again before the tombstone commit (the append's
+            # second write): the data landed, but a tombstone written
+            # after a steal could kill rows of the thief's pass
+            _verify_lease(*_fence)
+        if mode == "append" and gen > 0:
+            conflicts = (
+                _read_store_data(corpus.sparkSession, data_dir)
+                .filter(F.col("_gen").cast("long") < gen)
                 .select("vec_id")
-                .join(incoming_ids, "vec_id", "left_anti")
-                .limit(1)
+                .join(incoming_ids, "vec_id", "left_semi")
+                .distinct()
+                .withColumn("dead_below", F.lit(gen).cast("long"))
+            )
+            conflicts.write.mode("append").parquet(tomb_dir)
+        if mode == "append":
+            # append-vs-append detection: two concurrent appends both read
+            # max+1 and stamp the SAME _gen, so neither tombstones the
+            # other and a doubly-written vec_id would serve
+            # nondeterministically (row_number ties on equal _gen).  Our
+            # own new-gen rows live exactly in our batch partition
+            # (path-addressed — no partition-type inference); any OTHER
+            # row at this _gen is a foreign writer.
+            spark = corpus.sparkSession
+            total_new = (
+                _read_store_data(spark, data_dir)
+                .filter(F.col("_gen").cast("long") == gen)
                 .count()
             )
-        # the snapshot's last reader has run
-        _release(snapshot, carried)
-        if mine_new != n_incoming or foreign_same_batch:
-            raise RuntimeError(
-                f"concurrent append detected: batch {batch_id!r} in "
-                f"{data_dir!r} holds rows at this write's generation "
-                f"{gen} that this write did not produce "
-                f"({mine_new} stored vs {n_incoming} written"
-                f"{', foreign ids present' if foreign_same_batch else ''}) "
-                "— another writer appended under the SAME batch_id "
-                "concurrently. Give each writer its own batch_id, "
-                "compact the store, then re-run ONE of the appends."
+            mine = _read_batch_partition(spark, data_dir, batch_id)
+            mine_new = (
+                mine.filter(F.col("_gen").cast("long") == gen).count()
+                if mine is not None
+                else 0
             )
+            if total_new != mine_new:
+                raise RuntimeError(
+                    f"concurrent append detected: {total_new - mine_new} "
+                    f"row(s) outside batch {batch_id!r} carry this "
+                    f"write's generation {gen} in {data_dir!r} — another "
+                    "writer appended concurrently and conflict "
+                    "resolution between the two batches is undefined "
+                    "(equal _gen). Compact the store, then re-run ONE of "
+                    "the two appends."
+                )
+            # a concurrent append that reused the SAME batch_id lands its
+            # rows in OUR partition and counts as "mine" above — so also
+            # reconcile the partition's new-gen rows against the
+            # checkpointed incoming snapshot: a row count or id-set
+            # divergence means a foreign writer's files interleaved with
+            # (or replaced) ours under dynamic partition overwrite.  Two
+            # same-batch writers committing the EXACT same id set remain
+            # indistinguishable (and conflict only if their code values
+            # differ — a pipeline bug, not a race this check can see).
+            foreign_same_batch = 0
+            if mine is not None and mine_new == n_incoming:
+                foreign_same_batch = (
+                    mine.filter(F.col("_gen").cast("long") == gen)
+                    .select("vec_id")
+                    .join(incoming_ids, "vec_id", "left_anti")
+                    .limit(1)
+                    .count()
+                )
+            if mine_new != n_incoming or foreign_same_batch:
+                raise RuntimeError(
+                    f"concurrent append detected: batch {batch_id!r} in "
+                    f"{data_dir!r} holds rows at this write's generation "
+                    f"{gen} that this write did not produce "
+                    f"({mine_new} stored vs {n_incoming} written"
+                    f"{', foreign ids present' if foreign_same_batch else ''}) "
+                    "— another writer appended under the SAME batch_id "
+                    "concurrently. Give each writer its own batch_id, "
+                    "compact the store, then re-run ONE of the appends."
+                )
+    finally:
+        # the snapshot's last reader has run, or the write failed
+        _release(snapshot, carried)
     if root is not None:
         # both write modes validate the pointer: an overwrite racing a
         # compaction would otherwise be silently superseded by the

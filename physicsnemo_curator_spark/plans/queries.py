@@ -8641,9 +8641,9 @@ def q_media_imagehash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dmedia = media.filter(F.col("_side") == "d").drop("_side")
     amedia = media.filter(F.col("_side") == "a").drop("_side")
-    # both the banded join and the bit-string projection read the
-    # hashes; an 8x9 dhash recomputes faster than a checkpoint job
-    dh_all = ih.with_image_hashes(dmedia, method="dhash")
+    # hash ONCE: both the banded join and the bit-string projection
+    # read the same persisted signature table
+    dh_all = ih.with_image_hashes(dmedia, method="dhash").persist()
     pairs = ih.banded_hamming_pairs(dh_all, max_hamming=3, n_bands=4)
     dh = dh_all.filter(F.col("media_id") % 2 == 0)
     ah = ih.with_image_hashes(amedia, method="ahash")
@@ -8778,9 +8778,8 @@ def q_media_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded_hamming_pairs as _bhp,
     )
 
-    # fingerprint ONCE for both the join and the projection (the
-    # returned plan reads the checkpoint: caller owns)
-    fps_all = _ah.with_audio_fingerprints(media).localCheckpoint()
+    # fingerprint ONCE for both the join and the projection
+    fps_all = _ah.with_audio_fingerprints(media).persist()
     pairs = _bhp(fps_all, max_hamming=3, n_bands=4)
     fps = fps_all.filter(F.col("media_id") % 2 == 0)
     return (
@@ -8910,9 +8909,8 @@ def q_media_videohash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "height int, n_bytes long",
     )
     # fingerprint ONCE (frame explode + per-frame hashing + 64-way
-    # vote) for both the banded join and the projection (the returned
-    # plan reads the checkpoint: caller owns)
-    fps_all = ih.with_video_fingerprints(media).localCheckpoint()
+    # vote) for both the banded join and the projection
+    fps_all = ih.with_video_fingerprints(media).persist()
     pairs = ih.banded_hamming_pairs(fps_all, max_hamming=3, n_bands=4)
     fps = fps_all.filter(F.col("media_id") % 2 == 0)
     return (

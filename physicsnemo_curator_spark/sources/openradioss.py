@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.jobs import job_label
+from physicsnemo_curator_spark.core.store import release
 from physicsnemo_curator_spark.sources.vtk import path_mesh_id, read_vtk
 
 
@@ -85,6 +87,11 @@ def read_openradioss(
     Point-count mismatches across a run's timesteps raise (reference
     ``openradioss.py:371-374``) — a silent inner-join drop would
     corrupt every downstream displacement.
+
+    The points and cells are parsed once each (persisted, released on
+    return): ``points``, ``cells``, ``displacements`` and
+    ``trajectory`` come back as local checkpoints the caller owns;
+    ``point_data`` / ``cell_data`` / ``globals`` stay lazy.
     """
     runs = discover_runs(input_dir, vtk_glob)
     keymap_rows = [
@@ -107,29 +114,34 @@ def read_openradioss(
             .withColumnRenamed("run_id", "mesh_id")
         )
 
-    pts = _rekey(t["points"])
+    # one points parse: the consistency-check collect below fills the
+    # cache, and the t=0 base and the displacement window reuse it
+    pts = _rekey(t["points"]).persist()
 
     # consistency check: every timestep of a run must carry the same
     # point count (one tiny aggregate: |runs| x |timesteps| rows)
-    counts = (
-        pts.groupBy("mesh_id", "t").count().groupBy("mesh_id").agg(
-            F.countDistinct("count").alias("k"),
-            F.max("count").alias("n"),
-        )
-    ).collect()
+    with job_label(spark, "openradioss.read_openradioss/check"):
+        counts = (
+            pts.groupBy("mesh_id", "t").count().groupBy("mesh_id").agg(
+                F.countDistinct("count").alias("k"),
+                F.max("count").alias("n"),
+            )
+        ).collect()
     # completeness first: _rekey's inner join drops rows whose
     # reconstructed path id drifts from Spark's reported path, and an
     # EMPTY counts result would otherwise pass the per-run check
     # vacuously — the same loud-on-drift contract as read_vtk_domain
     seen = {r["mesh_id"] for r in counts}
     missing = sorted(set(runs) - seen)
+    bad = [r["mesh_id"] for r in counts if r["k"] != 1]
+    if missing or bad:
+        release(pts)
     if missing:
         raise ValueError(
             f"runs {missing} produced no scanned rows — path-format "
             "drift between the driver listing and Spark's binaryFile "
             "path (or empty timestep files)"
         )
-    bad = [r["mesh_id"] for r in counts if r["k"] != 1]
     if bad:
         raise ValueError(
             f"point count differs across timesteps for runs {bad} — "
@@ -143,7 +155,9 @@ def read_openradioss(
         F.col("y").alias("y0"),
         F.col("z").alias("z0"),
     )
-    cells0 = _rekey(t["cells"]).filter(F.col("t") == 0).drop("t")
+    # one cells parse: the referenced-point scan and the connectivity
+    # rewrite both reuse it
+    cells0 = _rekey(t["cells"]).filter(F.col("t") == 0).drop("t").persist()
 
     if prune_unreferenced:
         referenced = (
@@ -247,11 +261,17 @@ def read_openradioss(
 
     from physicsnemo_curator_spark.operators.mesh import stack_timesteps
 
+    with job_label(spark, "openradioss.read_openradioss/assemble"):
+        points_out = points_out.localCheckpoint()
+        cells_out = cells_out.localCheckpoint()
+        disp = disp.localCheckpoint()
+        traj = stack_timesteps(disp, value_cols=("dx", "dy", "dz")).localCheckpoint()
+    release(pts, cells0)
     return {
         "points": points_out,
         "cells": cells_out,
         "displacements": disp,
-        "trajectory": stack_timesteps(disp, value_cols=("dx", "dy", "dz")),
+        "trajectory": traj,
         "point_data": _field_table(t["point_data"], "point_id"),
         "cell_data": _field_table(t["cell_data"], "cell_id"),
         "globals": globals_df,

@@ -229,7 +229,9 @@ def test_bigram_lm_partial_aggregation_and_single_sort(spark, sf_dir):
 def test_openradioss_rekey_broadcasts_keymap(spark, tmp_path):
     """read_openradioss attaches (run_id, t) to every scanned row via a
     broadcast of the tiny path→timestep map — a shuffle there would
-    repartition every points table once per rekey."""
+    repartition every points table once per rekey.  The tables come
+    back materialized, so the plan checked is the one the source ran:
+    its point-count check, which joins nothing but the rekey."""
     from physicsnemo_curator_spark.sources.openradioss import read_openradioss
     from physicsnemo_curator_spark.sources.vtk_xml import write_vtu
 
@@ -239,9 +241,17 @@ def test_openradioss_rekey_broadcasts_keymap(spark, tmp_path):
     cells = [[0, 1, 2], [0, 2, 3]]
     for t in range(2):
         write_vtu(pts, cells, None, {}, str(rdir / f"ts{t}.vtu"))
-    t = read_openradioss(spark, str(tmp_path), vtk_glob="*.vtu")
-    plan = t["displacements"]._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    read_openradioss(spark, str(tmp_path), vtk_glob="*.vtu")
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    sql = spark._jsparkSession.sharedState().statusStore()
+    n = sql.executionsCount()
+    recent = sql.executionsList(max(n - 20, 0), 20)
+    plans = [
+        recent.apply(i).physicalPlanDescription()
+        for i in range(recent.size())
+        if recent.apply(i).description() == "openradioss.read_openradioss/check"
+    ]
+    assert "BroadcastHashJoin" in plans[-1]
 
 
 def test_r12_retrieval_family_plan_shapes(spark, sf_dir):

@@ -8,8 +8,10 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.store import release
 from physicsnemo_curator_spark.operators import (
     bpe,
     components,
@@ -102,6 +104,7 @@ CASES = {
     "train_bpe": _trainer(bpe.train_bpe),
     "train_bpe_hist": _trainer(bpe.train_bpe_hist),
     "simhash_duplicates": lambda s, t: dedup.simhash_duplicates(_docs(s)),
+    "simhash_near_duplicates": lambda s, t: dedup.simhash_near_duplicates(_docs(s)),
     "minhash_near_duplicates": lambda s, t: dedup.minhash_near_duplicates(_docs(s)),
     "banded_hamming_pairs": _banded_hamming,
     "pairwise_near_duplicates": _pairwise,
@@ -116,3 +119,18 @@ def test_operator_leaves_only_what_it_returns(spark, tmp_path, op):
         out.collect()  # a lazy result's plan runs, and may persist, here
     left = persisted_ids(spark) - before
     assert left == owned_ids(out), f"{op} left {len(left)} persisted RDDs"
+
+
+def test_release_frees_a_persisted_checkpoint(spark):
+    # a persist over a local checkpoint (Pipeline.run persists whatever
+    # its source returns) leaves the CacheManager; the checkpoint's own
+    # RDD stays with whoever made it
+    before = persisted_ids(spark)
+    cp = spark.range(10).localCheckpoint()
+    df = cp.persist()
+    assert df.count() == 10
+    release(df)
+    assert df.storageLevel == StorageLevel.NONE
+    assert persisted_ids(spark) - before == owned_ids(cp)
+    release(cp)
+    assert persisted_ids(spark) == before

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Regenerate docs/PLANS.md: executed physical plans of the flagship
+"""Regenerate docs/PLANS.md: the materialization policy (from
+``core.store.release``) and the executed physical plans of the flagship
 queries, annotated with the scale property each demonstrates.
 
 Usage: python tools/dump_plans.py [sf_dir]
@@ -7,11 +8,13 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import inspect
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from physicsnemo_curator_spark.core.store import release  # noqa: E402
 from physicsnemo_curator_spark.plans.queries import QUERIES  # noqa: E402
 from physicsnemo_curator_spark.session import get_spark  # noqa: E402
 
@@ -46,20 +49,6 @@ SHOWCASE = [
     ),
 ]
 
-# hand-written, kept across regenerations
-MATERIALIZATION = """
-## Materialization
-
-One rule says who frees a frame an operator persists or checkpoints, and one call frees it: `core.store.release(*frames)` (a persisted frame leaves the CacheManager, a local checkpoint drops its RDD's blocks, `None` is skipped).
-
-- Read only inside the call: released before the call returns (BPE rounds, superseded component labels, the split probe's frames, store-write snapshots).
-- Read by the lazy frame the call returns: not persisted when the plan reads it once per branch, or the output is materialized and the intermediate released (embedding LSH candidates, `read_image_data(cache=True)`).
-- Returned to the caller: the caller owns it; the docstring says so.
-- The dedup family's shared frames (`_cached_near_dup_pairs`) stay with the CacheManager, which serves equal plans; the plan memo keeps them fresh.
-
-Persist or checkpoint: under AQE each reference to a persisted frame whose cache is not built yet runs a cache-stage job of its own. A toy frame read three times in one query took 7 jobs persisted, 5 through `localCheckpoint`, 6 recomputed. A frame that several actions read is checkpointed; one that a single plan reads on two branches is left to the plan.
-"""
-
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -78,7 +67,11 @@ def main() -> None:
             "Each plan demonstrates one scale property asserted in "
             "`tests/test_plans.py`.\n"
         )
-        f.write(MATERIALIZATION)
+        # the release policy's one copy is core.store.release's docstring
+        f.write(
+            "\n## Materialization (`core.store.release`)\n\n"
+            f"{inspect.getdoc(release)}\n"
+        )
         for name, why in SHOWCASE:
             df = QUERIES[name].spark(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
